@@ -8,17 +8,18 @@ Phases:
 1. set-up: import the package, ``get_spark``, one first job, import the
    catalog (timed by run.py from process start to READY);
 2. cold pass: every cohort query once, in listed order, collected with
-   ``toPandas`` and checked against expected.json; then two untimed
-   warm-up rounds like those of the window;
+   ``toPandas`` and checked against expected.json; then four untimed
+   warm-up rounds that run each query once in a fresh sibling session;
 3. timed window: a fixed number of rounds, about ``--seconds`` on 4 cores
-   and at least three. A round takes
-   the cohort in a seeded order and, for each query, opens a fresh
-   ``spark.newSession()``, runs the query there (a rebuild: the layout
-   cache keys on the session, so every layout the query needs is built)
-   and runs it again in that session (a reuse: layouts are hit). Queries
-   drain through the noop sink. ``rebuild_pass_s`` and ``pass_s`` sum each
-   query's median rebuild and reuse time, so one slow sample moves them
-   less than it would move a single timed pass;
+   and at least three. A round takes the cohort in a seeded order and, for
+   each query, opens a fresh ``spark.newSession()``, runs the query there
+   (a rebuild: the layout cache keys on the session, so every layout the
+   query needs is built) and runs it again in that session (a reuse:
+   layouts are hit). Queries drain through the noop sink.
+   ``rebuild_pass_s`` and ``pass_s`` sum each query's median rebuild and
+   reuse time, and ``requests_per_s`` is the median over rounds of a
+   round's completed operations per second, so a slow stretch of the host
+   moves them less than it would move a single timed pass;
 4. every query is collected once more in the sibling session of its last
    window sample and checked, so layouts built and served in a sibling
    session are verified too.
@@ -54,13 +55,12 @@ from tracing import (
 
 
 MIN_ROUNDS = 3
-# Untimed rounds between the cold pass and the window: round times keep
-# falling for about two rounds after the cold pass (NOTES.md).
-WARMUP_ROUNDS = 2
-# Wall time of one round on 4 cores (NOTES.md). The window is a fixed
-# number of rounds so that every run measures the same stretch of the
-# warm-up curve.
-NOMINAL_ROUND_S = 5.0
+# Untimed rebuild-only rounds between the cold pass and the window: the
+# layout builds keep getting faster for about five runs (NOTES.md).
+WARMUP_ROUNDS = 4
+# Wall time of one warm round on 4 cores (NOTES.md). The window is a fixed
+# number of rounds so that every run measures the same amount of work.
+NOMINAL_ROUND_S = 3.5
 
 
 class Runner:
@@ -161,13 +161,14 @@ def main() -> int:
         runner.op(spark, name, collect=True)
     cold_s = time.perf_counter() - t0
 
+    # Warm-up rounds run each query once, in a fresh sibling session: a
+    # rebuild exercises everything a reuse does plus the layout builds,
+    # which take the most runs to warm up, at about half a round's cost.
     warmup_s = []
     for _ in range(WARMUP_ROUNDS):
         t0 = time.perf_counter()
         for name in rng.sample(cohort, len(cohort)):
-            session = spark.newSession()
-            runner.op(session, name)
-            runner.op(session, name)
+            runner.op(spark.newSession(), name)
         warmup_s.append(time.perf_counter() - t0)
 
     samples = {kind: {q: [] for q in cohort} for kind in ("rebuild", "reuse")}
@@ -175,13 +176,14 @@ def main() -> int:
     rounds, round_s = [], {True: [], False: []}
     peak = {"rdds": 0, "mb": 0.0, "heap": 0.0}
     last_session = {}
-    latencies = []
+    latencies, round_rates = [], []
     # Per-query medians need at least three rounds. Traced runs alternate
-    # traced and untraced rounds, for trace.overhead_ratio, and so run twice
-    # as many.
+    # traced and untraced rounds, for trace.overhead_ratio, and so need at
+    # least three of each.
     n_rounds = max(MIN_ROUNDS, round(args.seconds / NOMINAL_ROUND_S))
-    w0 = time.perf_counter()
-    for i in range(n_rounds * (2 if args.trace else 1)):
+    if args.trace:
+        n_rounds = max(2 * MIN_ROUNDS, n_rounds)
+    for i in range(n_rounds):
         traced = bool(args.trace) and i % 2 == 0
         tracer.enabled = traced
         stats = new_round_stats() if traced else None
@@ -189,6 +191,7 @@ def main() -> int:
         misses0 = tracer.counts.get("cache.misses", 0)
         g0 = jvm_gc(runner.sc) if traced else None
         r0 = time.perf_counter()
+        done = 0
         for name in rng.sample(cohort, len(cohort)):
             session = spark.newSession()
             last_session[name] = session
@@ -196,12 +199,14 @@ def main() -> int:
                 dt = runner.op(session, name, stats=stats)
                 if dt is None:
                     continue
+                done += 1
                 if traced:
                     traced_ms[name].append(dt * 1e3)
                 elif not args.trace:
                     samples[kind][name].append(dt)
                     latencies.append(dt)
         round_s[traced].append(time.perf_counter() - r0)
+        round_rates.append(done / round_s[traced][-1])
         tracer.enabled = False
         if traced:
             g1 = jvm_gc(runner.sc)
@@ -214,7 +219,6 @@ def main() -> int:
             peak["rdds"] = max(peak["rdds"], n_rdds)
             peak["mb"] = max(peak["mb"], mb)
             peak["heap"] = max(peak["heap"], jvm_heap_used_mb(runner.sc))
-    window_s = time.perf_counter() - w0
 
     for name in rng.sample(cohort, len(cohort)):
         runner.op(last_session[name], name, collect=True)
@@ -236,7 +240,7 @@ def main() -> int:
             "rebuild_pass_s": summed("rebuild"),
             "request_p50_ms": percentile(latencies, 50) * 1e3,
             "request_p95_ms": percentile(latencies, 95) * 1e3,
-            "requests_per_s": len(latencies) / window_s,
+            "requests_per_s": median(round_rates),
             "peak_rss_mb": peak_rss_mb(runner.sc),
         }
     else:
