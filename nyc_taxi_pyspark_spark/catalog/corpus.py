@@ -28,11 +28,9 @@ from nyc_taxi_pyspark_spark.operators.corpus import (
     with_mixture_keep,
     with_pack_bins,
 )
-from nyc_taxi_pyspark_spark.catalog._cache import SessionLayoutCache
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
 from nyc_taxi_pyspark_spark.operators.integrity import duck_row_hash, row_hash
 from nyc_taxi_pyspark_spark.operators.text import STOPWORDS, tokens
-
-_NTOK_CACHE = SessionLayoutCache()
 
 
 def _docs_ntok(spark, sf_dir):
@@ -43,7 +41,8 @@ def _docs_ntok(spark, sf_dir):
     that consume the tokenized frame through TWO plan branches (packing:
     cell totals + per-row offsets; capping: cell counts + per-row ranks)
     would otherwise scan and re-tokenize the corpus once per branch."""
-    return _NTOK_CACHE.get_or_build(
+    return STATE.get(
+        "corpus.docs_ntok",
         spark,
         sf_dir,
         lambda: _docs(spark, sf_dir).withColumn(

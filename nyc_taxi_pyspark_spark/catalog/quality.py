@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from nyc_taxi_pyspark_spark.catalog._cache import (
-    SessionLayoutCache,
-    SessionScalarCache,
-)
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
 from nyc_taxi_pyspark_spark.catalog.registry import query
 from nyc_taxi_pyspark_spark.functions.exact import (
     dsum,
@@ -1225,9 +1222,6 @@ def events_value_winsorized(spark, sf_dir):
     )
 
 
-_BASKET_CACHE = SessionLayoutCache()
-
-
 @query(
     "basket_pair_lift",
     oracle="""
@@ -1272,7 +1266,8 @@ def basket_pair_lift(spark, sf_dir):
     # the distinct item layout feeds three consumers (frequencies + both
     # join sides): persist it once instead of recomputing the distinct
     # (at 100 TB this is the ingest-time basket layout)
-    items = _BASKET_CACHE.get_or_build(
+    items = STATE.get(
+        "quality.basket",
         spark,
         sf_dir,
         lambda: li.select(
@@ -1319,13 +1314,44 @@ def basket_pair_lift(spark, sf_dir):
     )
 
 
-_COPURCHASE_CACHE = SessionLayoutCache()
-# k-core session state (r14): the node-degree layout of the co-purchase
-# graph, plus the adaptive-k scalar derived from it (r16: folded into
-# SessionScalarCache so every piece of session state shares one keying /
-# displacement / invalidate lifecycle — VERDICT r15 item 8).
-_KCORE_DEG_CACHE = SessionLayoutCache()
-_KCORE_K = SessionScalarCache()
+def _copurchase_edges(spark, sf_dir):
+    """(u, v) item pairs bought in one order (u < v), persisted once per
+    (session, table): triangles, k-core, link prediction and modularity
+    all read it (at 100 TB this is the materialized co-purchase graph
+    every downstream graph job shares)."""
+
+    def build():
+        items = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", F.col("l_partkey").alias("item")
+        )
+        return (
+            items.distinct()
+            .alias("a")
+            .join(items.distinct().alias("b"), "l_orderkey")
+            .filter(F.col("a.item") < F.col("b.item"))
+            .select(F.col("a.item").alias("u"), F.col("b.item").alias("v"))
+            .distinct()
+        )
+
+    return STATE.get("quality.copurchase", spark, sf_dir, build)
+
+
+def _copurchase_degrees(spark, sf_dir):
+    """(node, deg) of the co-purchase graph, persisted beside its edges:
+    k-core's first round, link prediction's seeds and modularity's degree
+    sums read it (at scale degree is ingest-maintained metadata beside
+    the edge table)."""
+
+    def build():
+        edges = _copurchase_edges(spark, sf_dir)
+        return (
+            edges.select(F.col("u").alias("node"))
+            .unionAll(edges.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+
+    return STATE.get("quality.copurchase_degrees", spark, sf_dir, build)
 
 
 @query(
@@ -1392,34 +1418,7 @@ def graph_triangle_counts(spark, sf_dir):
     orientation as CTEs. Top-20 nodes with full tie-breaks."""
     from nyc_taxi_pyspark_spark.operators.graph import triangle_counts
 
-    li = load_table(spark, sf_dir, "lineitem")
-    # persist the edge layout: it feeds the degree aggregate and all
-    # three sides of the wedge join (at 100 TB this is the materialized
-    # co-purchase graph every downstream graph job shares)
-    edges = _COPURCHASE_CACHE.get_or_build(
-        spark,
-        sf_dir,
-        lambda: (
-            li.select(
-                "l_orderkey", F.col("l_partkey").alias("item")
-            )
-            .distinct()
-            .alias("a")
-            .join(
-                li.select(
-                    "l_orderkey", F.col("l_partkey").alias("item")
-                )
-                .distinct()
-                .alias("b"),
-                "l_orderkey",
-            )
-            .filter(F.col("a.item") < F.col("b.item"))
-            .select(
-                F.col("a.item").alias("u"), F.col("b.item").alias("v")
-            )
-            .distinct()
-        ),
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return (
         triangle_counts(edges)
         .orderBy(F.desc("triangles"), "node")
@@ -2143,36 +2142,13 @@ def graph_kcore_membership(spark, sf_dir):
     would collapse the whole graph. The k scalar is the only
     driver-side value (same parameter discipline as pagerank's node
     count); each peel round is two hash semi-joins + one keyed count over
-    the shared co-purchase edge layout (_COPURCHASE_CACHE — built once
+    the shared co-purchase edge layout (``_copurchase_edges`` — built once
     per session, reused by triangles/k-core alike), with per-round
     lineage cuts (durable checkpoint_dir at cluster scale). The oracle
     unrolls the same four rounds as CTEs."""
     from nyc_taxi_pyspark_spark.operators.graph import kcore_peel
 
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = _COPURCHASE_CACHE.get_or_build(
-        spark,
-        sf_dir,
-        lambda: (
-            li.select("l_orderkey", F.col("l_partkey").alias("item"))
-            .distinct()
-            .alias("a")
-            .join(
-                li.select(
-                    "l_orderkey", F.col("l_partkey").alias("item")
-                )
-                .distinct()
-                .alias("b"),
-                "l_orderkey",
-            )
-            .filter(F.col("a.item") < F.col("b.item"))
-            .select(F.col("a.item").alias("u"), F.col("b.item").alias("v"))
-            .distinct()
-        ),
-    )
-    sym = edges.select(F.col("u").alias("node")).unionAll(
-        edges.select(F.col("v").alias("node"))
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     # The full degree frame (node-catalog-sized) and the adaptive-k
     # scalar are SESSION STATE, not per-invocation work (r14 — the graph
     # family's 1.13-1.24x creep adjudication localized the residual to
@@ -2181,11 +2157,7 @@ def graph_kcore_membership(spark, sf_dir):
     # starts). Both derive solely from the co-purchase edge layout that
     # is already session-persisted; at scale degree is ingest-maintained
     # metadata beside the edge table, same discipline as the IVF layout.
-    deg = _KCORE_DEG_CACHE.get_or_build(
-        spark,
-        sf_dir,
-        lambda: sym.groupBy("node").agg(F.count(F.lit(1)).alias("deg")),
-    )
+    deg = _copurchase_degrees(spark, sf_dir)
     def _adaptive_k():
         row = deg.agg(
             F.sum("deg").alias("s"), F.count(F.lit(1)).alias("n")
@@ -2193,7 +2165,7 @@ def graph_kcore_membership(spark, sf_dir):
         # empty graph sentinel: the 4-round peel of nothing is nothing
         return int(3 * (row["s"] // row["n"]) // 4) if row["n"] else None
 
-    k = _KCORE_K.get_or_build(spark, sf_dir, _adaptive_k)
+    k = STATE.get("quality.kcore_k", spark, sf_dir, _adaptive_k)
     if k is None:
         return spark.createDataFrame(
             [], "node bigint, core_degree bigint, k int"
@@ -2566,33 +2538,13 @@ def graph_link_prediction(spark, sf_dir):
     degrees and the classic scale trap. This query instead scopes to a
     seed set (how link prediction is actually served: per focal node),
     so the wedge work is O(Σ_{{seed}} d(seed) · d̄) — seed edges join the
-    shared co-purchase layout (_COPURCHASE_CACHE) once, existing edges
+    shared co-purchase layout (``_copurchase_edges``) once, existing edges
     are removed with a canonical-key anti join, TakeOrdered emits the
     top-20. Seeds pick by (degree, node) TakeOrdered; the oracle mirrors
     that with a ROW_NUMBER cap. At 100 TB the remaining hot spot is a
     celebrity seed's neighborhood — the same per-key skew the salting
     escape hatch covers."""
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = _COPURCHASE_CACHE.get_or_build(
-        spark,
-        sf_dir,
-        lambda: (
-            li.select("l_orderkey", F.col("l_partkey").alias("item"))
-            .distinct()
-            .alias("a")
-            .join(
-                li.select(
-                    "l_orderkey", F.col("l_partkey").alias("item")
-                )
-                .distinct()
-                .alias("b"),
-                "l_orderkey",
-            )
-            .filter(F.col("a.item") < F.col("b.item"))
-            .select(F.col("a.item").alias("u"), F.col("b.item").alias("v"))
-            .distinct()
-        ),
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     sym = edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -2600,13 +2552,7 @@ def graph_link_prediction(spark, sf_dir):
     # state (ingest-maintained metadata beside the edge layout) — the
     # per-invocation full-graph degree aggregate was two extra scans of
     # the edge layout per call for a frame that never changes in-session
-    deg = _KCORE_DEG_CACHE.get_or_build(
-        spark,
-        sf_dir,
-        lambda: sym.select(F.col("src").alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg")),
-    )
+    deg = _copurchase_degrees(spark, sf_dir)
     seeds = (
         deg.orderBy(F.desc("deg"), "node")
         .limit(_LINKPRED_SEEDS)
@@ -2834,33 +2780,13 @@ def graph_brand_modularity(spark, sf_dir):
     question 'does this metadata field explain the graph?'.
 
     All counts are exact integers off the shared co-purchase layout
-    (_COPURCHASE_CACHE): m is a 1-row broadcast, node→brand is a
+    (``_copurchase_edges``): m is a 1-row broadcast, node→brand is a
     broadcast dim join, within-edges is one filtered aggregate, and the
     cross-brand Q fold re-quantizes each term to int64 (k-term double
     sums are order-sensitive) — the one division pair per term is
     mirrored IEEE. No iteration, no pairwise work beyond the edge list
     itself."""
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = _COPURCHASE_CACHE.get_or_build(
-        spark,
-        sf_dir,
-        lambda: (
-            li.select("l_orderkey", F.col("l_partkey").alias("item"))
-            .distinct()
-            .alias("a")
-            .join(
-                li.select(
-                    "l_orderkey", F.col("l_partkey").alias("item")
-                )
-                .distinct()
-                .alias("b"),
-                "l_orderkey",
-            )
-            .filter(F.col("a.item") < F.col("b.item"))
-            .select(F.col("a.item").alias("u"), F.col("b.item").alias("v"))
-            .distinct()
-        ),
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     brands = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), "p_brand"
     )
@@ -2870,14 +2796,9 @@ def graph_brand_modularity(spark, sf_dir):
     # from state the session already keeps. Σdeg = 2m exactly (each
     # edge contributes one count at each endpoint), so m is a 20k-row
     # aggregate over the degree layout instead of a 2.4M-row edge scan.
-    sym = edges.select(F.col("u").alias("node")).unionAll(
-        edges.select(F.col("v").alias("node"))
+    deg = _copurchase_degrees(spark, sf_dir).select(
+        "node", F.col("deg").alias("d")
     )
-    deg = _KCORE_DEG_CACHE.get_or_build(
-        spark,
-        sf_dir,
-        lambda: sym.groupBy("node").agg(F.count(F.lit(1)).alias("deg")),
-    ).select("node", F.col("deg").alias("d"))
     m = deg.agg(F.expr("sum(d) div 2").alias("m"))
     dsum_b = (
         deg.join(F.broadcast(brands), "node")

@@ -10,10 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from nyc_taxi_pyspark_spark.catalog._cache import (
-    SessionLayoutCache,
-    SessionScalarCache,
-)
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
 from nyc_taxi_pyspark_spark.catalog.registry import query
 from nyc_taxi_pyspark_spark.operators.iterative import cut_lineage
 from nyc_taxi_pyspark_spark.operators.similarity import (
@@ -36,28 +33,11 @@ def _emb(spark, sf_dir):
     return parallelize_scan(load_table(spark, sf_dir, "embeddings"), spark)
 
 
-_BUCKETED_CACHE = SessionLayoutCache()
-# (id, label) semantic-dup components. Cache-boundary note (r15 VERDICT /
-# ADVICE): this entry is an INTERMEDIATE derived layout (a component
-# assignment over the persisted bucket layout), not any query's output
-# frame — embed_semantic_dedup's declared result additionally left-joins
-# the full vec_id catalog and derives cluster_id/is_canonical columns.
-# It currently has one catalog consumer; the single-consumer shape is
-# justified because the assignment is the same ingest-maintained dedup
-# state _DUP_CC_CACHE models for the MinHash graph (multi-consumer
-# there), and a second embedding-side consumer (incremental semantic
-# dedup) is the documented ingest story. Cold build cost stays visible
-# in queries_cold.
-_SEM_CC_CACHE = SessionLayoutCache()
-_SEM_CC_N = SessionScalarCache()  # its row count — guards the broadcast hint
-# PQ codebook seeds and the quantized query vector: bounded driver-side
-# parameters (PQ_K + 1 rows, the query-vector discipline) that THREE PQ
-# queries re-collected per call — two driver jobs each, pure scheduling
-# tax on state that cannot change within a session (r16, guide §5).
-_PQ_SEEDS = SessionScalarCache()
-_PQ_QUERY_XQ = SessionScalarCache()
-
-
+# PQ codebook seeds and the quantized query vector are session scalars:
+# bounded driver-side parameters (PQ_K + 1 rows, the query-vector
+# discipline) that THREE PQ queries re-collected per call — two driver jobs
+# each, pure scheduling tax on state that cannot change within a session
+# (r16, guide §5).
 def _pq_seed_vectors(spark, sf_dir):
     """Seed vectors (vec_id 1..PQ_K, quantized, finite) for pq_codebooks."""
     from nyc_taxi_pyspark_spark.operators.similarity import PQ_K, quantize8
@@ -73,7 +53,7 @@ def _pq_seed_vectors(spark, sf_dir):
             .collect()
         ]
 
-    return _PQ_SEEDS.get_or_build(spark, sf_dir, build)
+    return STATE.get("similarity.pq_seeds", spark, sf_dir, build)
 
 
 def _pq_query_vector(spark, sf_dir):
@@ -89,7 +69,7 @@ def _pq_query_vector(spark, sf_dir):
         )
         return None if row is None else [int(x) for x in row["xq"]]
 
-    return _PQ_QUERY_XQ.get_or_build(spark, sf_dir, build)
+    return STATE.get("similarity.pq_query_xq", spark, sf_dir, build)
 
 
 def _bucketed(spark, sf_dir):
@@ -105,7 +85,8 @@ def _bucketed(spark, sf_dir):
     saving is identical: the big bucket/norm expression tree is planned and
     computed once per session, and every ANN/near-dup query plans a small
     filter+fold instead."""
-    return _BUCKETED_CACHE.get_or_build(
+    return STATE.get(
+        "similarity.bucketed",
         spark,
         sf_dir,
         lambda: _emb(spark, sf_dir).select(
@@ -817,13 +798,11 @@ def _centroids(spark, sf_dir):
     return cs
 
 
-_IVF_CACHE = SessionLayoutCache()
-
-
 def _ivf(spark, sf_dir):
     """Corpus with its IVF cell id, persisted once per (session, table) —
     at scale `cell` is the write-time partition column an IVF index is."""
-    return _IVF_CACHE.get_or_build(
+    return STATE.get(
+        "similarity.ivf",
         spark,
         sf_dir,
         lambda: _bucketed(spark, sf_dir).select(
@@ -1216,7 +1195,11 @@ def embed_semantic_dedup(spark, sf_dir):
     # join broadcasts explicitly — the cc frame is RDD-backed
     # (post-checkpoint), so Spark cannot estimate it and would otherwise
     # sort-merge-join the whole corpus against a dup-cluster-sized table.
-    cc = _SEM_CC_CACHE.get_or_build(
+    # The entry is an intermediate layout, not this query's output frame,
+    # and has one consumer: it is the ingest-maintained dedup state that
+    # "text.dup_cc" models for the MinHash graph (r15 VERDICT / ADVICE).
+    cc = STATE.get(
+        "similarity.sem_cc",
         spark,
         sf_dir,
         lambda: connected_components(pairs, src="id_a", dst="id_b"),
@@ -1226,7 +1209,7 @@ def embed_semantic_dedup(spark, sf_dir):
     # otherwise let the planner pick from the catalog side's stats
     from nyc_taxi_pyspark_spark.catalog.text import CC_BROADCAST_MAX_ROWS
 
-    n_cc = _SEM_CC_N.get_or_build(spark, sf_dir, cc.count)
+    n_cc = STATE.get("similarity.sem_cc_n", spark, sf_dir, cc.count)
     cc_frame = cc.withColumnRenamed("id", "vec_id")
     if n_cc <= CC_BROADCAST_MAX_ROWS:
         cc_frame = F.broadcast(cc_frame)
@@ -2001,7 +1984,6 @@ def embed_ivf_balance(spark, sf_dir):
 
 _PI_ITERS = 3  # unrolled power-iteration rounds
 _PI_Q = 1000  # component quantization (floor(x*1000)) and state scale
-_PI_LAYOUT_CACHE = SessionLayoutCache()  # quantized (vec_id, dim, val) rows
 
 
 def _power_iteration_oracle() -> str:
@@ -2087,7 +2069,8 @@ def embed_power_iteration_pc1(spark, sf_dir):
     # the oracle's embedding[i] over generate_series(1, DIM) does (missing
     # element → NULL → qfloor 0), so a short or NULL array contributes
     # zeros instead of shifting positions.
-    eq = _PI_LAYOUT_CACHE.get_or_build(
+    eq = STATE.get(
+        "similarity.pi_layout",
         spark,
         sf_dir,
         lambda: parallelize_scan(

@@ -9,10 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_pyspark_spark.catalog._cache import (
-    SessionLayoutCache,
-    SessionScalarCache,
-)
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
 from nyc_taxi_pyspark_spark.catalog.registry import query
 from nyc_taxi_pyspark_spark.functions.exact import oracle_davg
 from nyc_taxi_pyspark_spark.operators.heavy import heavy_hitters_exact
@@ -195,16 +192,11 @@ def _near_dup_oracle() -> str:
     """
 
 
-_PAIR_CACHE = SessionLayoutCache()
-# corpus row count: a driver-side metadata scalar two queries (TF-ICF's N,
-# incremental dedup's split point) re-counted per call (r16, guide §5) —
-# at 100 TB this is catalog metadata, not a job
-_N_DOCS = SessionScalarCache()
-_N_TOKENS = SessionScalarCache()  # total corpus token count (bigram lift's N)
-
-
 def _n_docs(spark, sf_dir) -> int:
-    return _N_DOCS.get_or_build(spark, sf_dir, _docs(spark, sf_dir).count)
+    """Corpus row count: a driver-side metadata scalar two queries (TF-ICF's
+    N, incremental dedup's split point) re-counted per call (r16, guide §5)
+    — at 100 TB this is catalog metadata, not a job."""
+    return STATE.get("text.n_docs", spark, sf_dir, _docs(spark, sf_dir).count)
 
 
 def _near_dup_pairs_cached(spark, sf_dir):
@@ -213,8 +205,11 @@ def _near_dup_pairs_cached(spark, sf_dir):
     tiny pair set, so a full catalog run pays the signature scan + band
     join once — the same materialized-layout discipline as
     ``_simhash_sigs`` / similarity's ``_bucketed``."""
-    return _PAIR_CACHE.get_or_build(
-        spark, sf_dir, lambda: near_dup_pairs(_docs(spark, sf_dir))
+    return STATE.get(
+        "text.pairs",
+        spark,
+        sf_dir,
+        lambda: near_dup_pairs(_docs(spark, sf_dir)),
     )
 
 
@@ -282,16 +277,16 @@ def _simhash_pairs_oracle() -> str:
     """
 
 
-_SIMHASH_SIG_CACHE = SessionLayoutCache()
-
-
 def _simhash_sigs(spark, sf_dir):
     """128-bit signature layout, persisted once per (session, table) —
     locally a persist() of the derived columns; at 100 TB the signature is
     written next to the documents at ingest (same storage contract as the
     similarity engine's ``_bucketed`` layout)."""
-    return _SIMHASH_SIG_CACHE.get_or_build(
-        spark, sf_dir, lambda: simhash_signature(_docs(spark, sf_dir))
+    return STATE.get(
+        "text.simhash_sigs",
+        spark,
+        sf_dir,
+        lambda: simhash_signature(_docs(spark, sf_dir)),
     )
 
 
@@ -485,16 +480,14 @@ def _ngram_oracle() -> str:
     )
 
 
-_NGRAM_LAYOUT_CACHE = SessionLayoutCache()
-
-
 def _ngram_layout(spark, sf_dir):
     """Char-8-gram (shingles, h0..h7) signature layout, persisted once per
     (session, table) — the same discipline as ``_simhash_sigs``. Without it
     the shingle+signature pipeline replans on BOTH sides of the band
     self-join and both verification joins (the round-2 bench regression:
     1.49→1.95 s); with it one signature scan feeds all four consumers."""
-    return _NGRAM_LAYOUT_CACHE.get_or_build(
+    return STATE.get(
+        "text.ngram_layout",
         spark,
         sf_dir,
         lambda: minhash_layout(
@@ -649,10 +642,6 @@ def _dup_clusters_oracle() -> str:
     """
 
 
-_DUP_CC_CACHE = SessionLayoutCache()  # (id, label) components of the pair layout
-_DUP_CC_N = SessionScalarCache()  # its row count — guards the broadcast hint
-_SRC_GRAM_CACHE = SessionLayoutCache()  # distinct (source, gram) vocabulary
-
 # Explicit-broadcast guard (r15 ADVICE): component frames are RDD-backed
 # (post-checkpoint) so Spark cannot size-estimate them — the hint is what
 # prevents a corpus-wide sort-merge join — but the dup-cluster frame
@@ -672,8 +661,11 @@ def _cc_hint(df, n_rows: int):
 def _dup_cc_hint(spark, sf_dir, df):
     """The dup-components guard: row count is session state beside the cc
     layout (one cheap count over the already-persisted frame)."""
-    n = _DUP_CC_N.get_or_build(
-        spark, sf_dir, _dup_components_cached(spark, sf_dir).count
+    n = STATE.get(
+        "text.dup_cc_n",
+        spark,
+        sf_dir,
+        _dup_components_cached(spark, sf_dir).count,
     )
     return _cc_hint(df, n)
 
@@ -689,7 +681,8 @@ def _dup_components_cached(spark, sf_dir):
     operator consumes."""
     from nyc_taxi_pyspark_spark.operators.text import connected_components
 
-    return _DUP_CC_CACHE.get_or_build(
+    return STATE.get(
+        "text.dup_cc",
         spark,
         sf_dir,
         lambda: connected_components(
@@ -817,7 +810,6 @@ def text_tficf_topk(spark, sf_dir):
 
 
 _BM25_TERMS = ("spark", "join", "window")
-_BM25_STATS_CACHE = SessionLayoutCache()  # 1-row (N, Σdl, df_t) index stats
 # k1=1.2, b=0.75 pre-folded: k1+1=2.2, k1*(1-b)=0.25·1.2, k1*b=0.75·1.2 —
 # written as 1.2*(0.25 + 0.75*x) in BOTH engines so the float expression
 # trees match operation-for-operation.
@@ -925,7 +917,8 @@ def bm25_frame(spark, sf_dir):
     # docstring promises — session state beside the other text layouts, so
     # the scoring pass is the only per-invocation tokenize of the corpus
     # (it was a second full pass per call before)
-    stats = _BM25_STATS_CACHE.get_or_build(
+    stats = STATE.get(
+        "text.bm25_stats",
         spark,
         sf_dir,
         lambda: base.agg(
@@ -1199,7 +1192,8 @@ def text_bigram_topk(spark, sf_dir):
     # Session metadata scalar (r16, guide §5): the total token count
     # derives solely from the documents table and was a per-call driver
     # job scanning the corpus — same discipline as _n_docs.
-    n_total = _N_TOKENS.get_or_build(
+    n_total = STATE.get(
+        "text.n_tokens",
         spark,
         sf_dir,
         lambda: int(
@@ -1348,10 +1342,6 @@ def text_unigram_rarity(spark, sf_dir):
     )
 
 
-_FP_LAYOUT_CACHE = SessionLayoutCache()
-_FIRSTDOC_CACHE = SessionLayoutCache()  # novelty curve's gram->first-owner table
-
-
 def _fp_layout(spark, sf_dir):
     """(doc_id, fp) exact-dup fingerprints, persisted once per (session,
     table) — the ingest-time artifact both the Bloom gate and the
@@ -1359,7 +1349,8 @@ def _fp_layout(spark, sf_dir):
     the corpus and re-hashes the full text per use."""
     from nyc_taxi_pyspark_spark.operators.text import fingerprint
 
-    return _FP_LAYOUT_CACHE.get_or_build(
+    return STATE.get(
+        "text.fp_layout",
         spark,
         sf_dir,
         lambda: _docs(spark, sf_dir).select("doc_id", fingerprint().alias("fp")),
@@ -1368,8 +1359,6 @@ def _fp_layout(spark, sf_dir):
 
 _BLOOM_M = 16384  # bit-array size
 _BLOOM_K = 4  # hash functions
-_BLOOM_SPLIT = SessionScalarCache()  # base/batch split point per session
-_BLOOM_BITS_CACHE = SessionLayoutCache()  # populated bit set (≤ _BLOOM_M rows)
 
 
 def _duck_bloom_bit(expr: str) -> str:
@@ -1438,8 +1427,8 @@ def corpus_bloom_prefilter(spark, sf_dir):
     # story): both derive solely from the persisted fp layout, so
     # re-counting the corpus and re-exploding the base side's K bits per
     # probe call was pure per-invocation tax
-    split = _BLOOM_SPLIT.get_or_build(
-        spark, sf_dir, lambda: fps.count() // 2
+    split = STATE.get(
+        "text.bloom_split", spark, sf_dir, lambda: fps.count() // 2
     )
     base_fps = fps.filter(F.col("doc_id") < split).select("fp")
     batch = fps.filter(F.col("doc_id") >= split).select("doc_id", "fp")
@@ -1451,7 +1440,8 @@ def corpus_bloom_prefilter(spark, sf_dir):
             % _BLOOM_M
         )
 
-    base_bits = _BLOOM_BITS_CACHE.get_or_build(
+    base_bits = STATE.get(
+        "text.bloom_bits",
         spark,
         sf_dir,
         lambda: base_fps.select(
@@ -1679,7 +1669,6 @@ def corpus_incremental_dedup(spark, sf_dir):
 _TFIDF_TOPM = 32  # truncated sparse vector: top-m terms per doc by weight
 _TFIDF_DF_FRAC = 20.0  # drop terms appearing in more than N/20 docs
 _TFIDF_MIN_COS = 0.5
-_TFIDF_CACHE = SessionLayoutCache()
 
 
 def _tfidf_vectors(spark, sf_dir):
@@ -1732,7 +1721,7 @@ def _tfidf_vectors(spark, sf_dir):
             F.col("__rk") <= _TFIDF_TOPM
         ).drop("__rk")
 
-    return _TFIDF_CACHE.get_or_build(spark, sf_dir, build)
+    return STATE.get("text.tfidf", spark, sf_dir, build)
 
 
 @query(
@@ -1835,10 +1824,6 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
     )
 
 
-_SYNDICATION_CACHE = SessionLayoutCache()
-_SYNDICATION_N = SessionScalarCache()
-
-
 def _syndication_oracle() -> str:
     from nyc_taxi_pyspark_spark.operators.graph import oracle_pagerank_cte
 
@@ -1892,7 +1877,7 @@ def source_syndication_rank(spark, sf_dir):
     # cut-point Spark would replay the whole LSH pair pipeline 5× over
     # (measured 222 s → ~2 s). At 100 TB this is the materialized domain
     # graph every downstream ranking job shares.
-    def build_graph():
+    def build_edges():
         pairs = _near_dup_pairs_cached(spark, sf_dir).select(
             "doc_a", "doc_b"
         )
@@ -1909,7 +1894,7 @@ def source_syndication_rank(spark, sf_dir):
             .filter(F.col("s_a") != F.col("s_b"))
             .select("s_a", "s_b")
         )
-        edges = (
+        return (
             cross.select(
                 F.col("s_a").alias("src"), F.col("s_b").alias("dst")
             )
@@ -1921,31 +1906,20 @@ def source_syndication_rank(spark, sf_dir):
             .groupBy("src", "dst")
             .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
         )
-        nodes = (
-            srcmap.select(F.col("source").alias("node"))
-            .distinct()
-            .select("node", F.lit(None).cast("bigint").alias("w"))
-        )
-        # one persisted frame holds both: edge rows (dst non-null) and
-        # node rows (dst null) — a SessionLayoutCache holds ONE DataFrame
-        return edges.select(
-            "src", "dst", "w", F.lit(False).alias("is_node")
-        ).unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.lit(None).cast("string").alias("dst"),
-                "w",
-                F.lit(True).alias("is_node"),
-            )
-        )
 
-    g = _SYNDICATION_CACHE.get_or_build(spark, sf_dir, build_graph)
-    edges = g.filter(~F.col("is_node")).select("src", "dst", "w")
-    nodes = g.filter(F.col("is_node")).select(F.col("src").alias("node"))
-    # node count is SESSION STATE beside the persisted graph layout (the
+    edges = STATE.get("text.syndication_edges", spark, sf_dir, build_edges)
+    nodes = STATE.get(
+        "text.syndication_nodes",
+        spark,
+        sf_dir,
+        lambda: _docs(spark, sf_dir)
+        .select(F.col("source").alias("node"))
+        .distinct(),
+    )
+    # node count is SESSION STATE beside the persisted node layout (the
     # kcore r14 discipline): it derives solely from the cached frame, so
     # re-counting it per invocation is a pure driver-job tax on every call
-    n_nodes = _SYNDICATION_N.get_or_build(spark, sf_dir, nodes.count)
+    n_nodes = STATE.get("text.syndication_n", spark, sf_dir, nodes.count)
     if n_nodes == 0:
         # empty corpus: a well-typed empty ranking, not a div-by-zero
         return spark.createDataFrame(
@@ -2672,7 +2646,7 @@ def text_novelty_curve(spark, sf_dir):
     aggregate, not a window over a global order, so the wide work is one
     gram-key shuffle (map-side combined) + one join back on the gram key.
     The (gram → first owner) table persists once per session
-    (_FIRSTDOC_CACHE) because TWO branches consume it — the doc join and
+    ("text.first_doc") because TWO branches consume it — the doc join and
     the per-cell novel totals — and at 100 TB it is the ingest-time
     artifact a crawler maintains anyway. The cumulative curve over the
     per-doc aggregate is TWO-TIER (the Gini global-rank discipline):
@@ -2691,7 +2665,8 @@ def text_novelty_curve(spark, sf_dir):
         ),
         lambda i: F.concat_ws(" ", F.slice(wcol, i, _SPAN_K)),
     )
-    first_doc = _FIRSTDOC_CACHE.get_or_build(
+    first_doc = STATE.get(
+        "text.first_doc",
         spark,
         sf_dir,
         lambda: (
@@ -2784,7 +2759,6 @@ def text_novelty_curve(spark, sf_dir):
     )
 
 
-_TRIGRAM_CACHE = SessionLayoutCache()
 _SEARCH_PHRASE = "spark join"
 
 
@@ -2820,7 +2794,8 @@ def text_trigram_search(spark, sf_dir):
     full-scan predicate: index + verify must give exactly the scan's
     answer."""
     d = _docs(spark, sf_dir)
-    tris = _TRIGRAM_CACHE.get_or_build(
+    tris = STATE.get(
+        "text.trigrams",
         spark,
         sf_dir,
         # length >= 3 filter first: sequence(1, 0) is the DESCENDING
@@ -2934,7 +2909,7 @@ def corpus_source_overlap(spark, sf_dir):
     # names — session state, not per-invocation work: THREE consumers
     # below (sizes, both self-join sides) re-ran the tokenize + explode +
     # distinct pipeline per reference before
-    g = _SRC_GRAM_CACHE.get_or_build(spark, sf_dir, build_source_grams)
+    g = STATE.get("text.source_grams", spark, sf_dir, build_source_grams)
     sizes = g.groupBy("source").agg(F.count("*").alias("n"))
     inter = (
         g.alias("a")

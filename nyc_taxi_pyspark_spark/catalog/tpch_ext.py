@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_pyspark_spark.catalog._cache import SessionLayoutCache
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
 from nyc_taxi_pyspark_spark.catalog.registry import query
 from nyc_taxi_pyspark_spark.functions.exact import dsum, oracle_dsum
 from nyc_taxi_pyspark_spark.sources.io import load_table
@@ -683,9 +683,6 @@ _PS_SQL = (
 )
 
 
-_PARTSUPP_CACHE = SessionLayoutCache()
-
-
 def _partsupp(spark, sf_dir):
     """Derived partsupp (adaptation — see module docstring): one exact
     aggregate over lineitem. MIN is order-independent on doubles;
@@ -699,7 +696,8 @@ def _partsupp(spark, sf_dir):
     + aggregate in each of the four; the build is paid in the first
     consumer's cold run (queries_cold). Multi-consumer derived layout of
     a persisted input — squarely inside the session-state boundary rule."""
-    return _PARTSUPP_CACHE.get_or_build(
+    return STATE.get(
+        "tpch_ext.partsupp",
         spark,
         sf_dir,
         lambda: load_table(spark, sf_dir, "lineitem")

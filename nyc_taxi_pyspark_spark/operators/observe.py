@@ -27,14 +27,6 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def observed_counts(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    """Attach a row-count + null-free-count observation to a frame. Metrics
-    are available on the Observation after the first action on the result."""
-    obs = Observation(name)
-    out = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    return out, obs
-
-
 def clean_with_accounting(
     df: DataFrame, rules, dedup_keys=None
 ) -> tuple[DataFrame, dict]:

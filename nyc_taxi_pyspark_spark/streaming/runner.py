@@ -57,9 +57,9 @@ class _StreamEntry:
 
 
 _RUNNING: dict[tuple, _StreamEntry] = {}
-# Serving-layer requests hit this registry from concurrent threads (same
-# scenario SessionLayoutCache locks against): without the lock two threads
-# can both miss, both start a stream, and the loser's query is overwritten
+# Serving-layer requests hit this registry from concurrent threads (the
+# scenario catalog._cache.SessionState locks against): without the lock two
+# threads can both miss, both start a stream, and the loser's query is overwritten
 # in the dict — active, untracked, never stopped. The GLOBAL lock covers
 # only registry lookup/insert/evict (O(registry) bookkeeping, never a
 # drain): holding it across processAllAvailable() serialized callers on
@@ -135,7 +135,7 @@ def run_stream_cached(
     and restarted.
 
     The SESSION is part of the registry key (held by identity, same
-    rationale as catalog._cache.SessionLayoutCache): the memory sink's
+    rationale as the catalog._cache.SessionState key): the memory sink's
     table is a temp view of the session that started the query, so a
     sibling session can never read it — before the session joined the
     key, a sibling's lookup failed the ``spark.table`` read, popped the
