@@ -9,6 +9,12 @@ key. Every entry is reached through the one module-level :data:`STATE`::
 
     STATE.get("text.pairs", spark, sf_dir, build)
 
+Plain driver data that does not depend on the session (the query vector
+and the literal IVF centroids the similarity catalog inlines) is a shared
+entry, keyed by sf_dir alone so a fresh session skips the point lookup::
+
+    STATE.get_shared("similarity.centroids", sf_dir, build)
+
 Key. An entry is keyed by (SparkSession identity, applicationId, sf_dir).
 The SESSION must be part of the key, not just the applicationId: a
 DataFrame is bound to the session that built it, and sibling sessions from
@@ -69,7 +75,7 @@ class _Entry:
     def __init__(self) -> None:
         self.lock = threading.Lock()
         self.session: SparkSession | None = None
-        self.key: tuple[str, str] | None = None
+        self.key: tuple | None = None
         # key is None when empty: a cached None value (kcore's empty-graph
         # k) is still a hit
         self.value = None
@@ -93,15 +99,28 @@ class SessionState:
         self._lock = threading.Lock()  # guards _entries, not the builds
 
     def get(self, name: str, spark: SparkSession, sf_dir: str, build: Callable):
+        return self._get(name, spark, (spark.sparkContext.applicationId, sf_dir), build)
+
+    def get_shared(self, name: str, sf_dir: str, build: Callable):
+        """A process-wide driver value keyed by ``sf_dir`` alone and shared
+        by every session: plain data read from a table (a query vector,
+        literal centroids), which costs a Spark job to fetch and is the
+        same in every session. Never a DataFrame — a frame is bound to the
+        session that built it. One live value per name, and
+        :meth:`invalidate` drops it like any other entry."""
+        return self._get(name, None, (None, sf_dir), build)
+
+    def _get(self, name: str, spark: SparkSession | None, key: tuple, build: Callable):
         with self._lock:
             entry = self._entries.setdefault(name, _Entry())
-        key = (spark.sparkContext.applicationId, sf_dir)
         with entry.lock:
             if entry.key == key and entry.session is spark:
                 return entry.value
             entry.drop()  # before build(): see the module docstring
             value = build()
             if isinstance(value, DataFrame):
+                if spark is None:
+                    raise TypeError(f"{name}: a shared entry cannot hold a DataFrame")
                 value = value.persist()
             entry.session, entry.key, entry.value = spark, key, value
             return value

@@ -25,6 +25,8 @@ from nyc_taxi_pyspark_spark.operators.similarity import (
     lsh_bucket_py,
     qfloor,
     safe_div,
+    sql_double,
+    sql_doubles,
 )
 from nyc_taxi_pyspark_spark.sources.io import load_table, parallelize_scan
 
@@ -43,13 +45,11 @@ def _pq_seed_vectors(spark, sf_dir):
     from nyc_taxi_pyspark_spark.operators.similarity import PQ_K, quantize8
 
     def build():
-        vq = _emb(spark, sf_dir).select(
-            "vec_id", quantize8(F.col("embedding")).alias("xq")
-        )
+        vq = _emb(spark, sf_dir).select("vec_id", quantize8("embedding").alias("xq"))
         return [
             (int(r["vec_id"]), [int(x) for x in r["xq"]])
             for r in vq.filter(F.col("vec_id").between(1, PQ_K))
-            .filter(~F.exists("xq", lambda x: x.isNull()))
+            .filter("NOT exists(xq, x -> x IS NULL)")
             .collect()
         ]
 
@@ -63,7 +63,7 @@ def _pq_query_vector(spark, sf_dir):
     def build():
         row = (
             _emb(spark, sf_dir)
-            .select("vec_id", quantize8(F.col("embedding")).alias("xq"))
+            .select("vec_id", quantize8("embedding").alias("xq"))
             .filter(F.col("vec_id") == 0)
             .first()
         )
@@ -93,14 +93,14 @@ def _bucketed(spark, sf_dir):
             "vec_id",
             "label",
             "embedding",
-            lsh_bucket(F.col("embedding")).alias("bucket"),
-            l2_norm(F.col("embedding")).alias("nrm"),
+            lsh_bucket("embedding").alias("bucket"),
+            l2_norm("embedding").alias("nrm"),
         ),
     )
 
 
-def _query_vec_literal(spark, sf_dir, vec_id: int = 0) -> F.Column:
-    """The query vector as a literal array expression.
+def _query_vec_literal(spark, sf_dir, vec_id: int = 0) -> list[float]:
+    """The query vector's components, to inline as a literal array.
 
     A similarity query's vector is a *parameter*, not a joinable relation:
     one pushed-filter point lookup fetches it, then it's inlined as 64
@@ -110,10 +110,14 @@ def _query_vec_literal(spark, sf_dir, vec_id: int = 0) -> F.Column:
     broadcast build / crossJoin machinery runs per query. (Round-1 bench
     paid a full-table `parallelize_scan` shuffle + broadcast exchange on
     this path twice per ANN query — the 19.5 s outlier.)
+
+    The components are a shared store entry (one lookup per table dir for
+    the whole process, dropped by ``STATE.invalidate()``): a fresh-session
+    point lookup costs ~150 ms, which every sibling-session rebuild would
+    otherwise pay.
     """
-    key = (sf_dir, vec_id)
-    vals = _QUERY_VEC_CACHE.get(key)
-    if vals is None:
+
+    def build():
         row = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == vec_id)
@@ -124,16 +128,13 @@ def _query_vec_literal(spark, sf_dir, vec_id: int = 0) -> F.Column:
             raise ValueError(f"query vector vec_id={vec_id} not found in {sf_dir}")
         # Literal round-trip is exact: parquet float32 -> Python float ->
         # literal double is the same IEEE value the in-plan cast produces.
-        vals = [float(x) for x in row[0]]
-        _QUERY_VEC_CACHE[key] = vals
-    return vals
+        return [float(x) for x in row[0]]
+
+    return STATE.get_shared(f"similarity.query_vec.{vec_id}", sf_dir, build)
 
 
-_QUERY_VEC_CACHE: dict[tuple[str, int], list[float]] = {}
-
-
-def _query_param(spark, sf_dir, vec_id: int = 0):
-    """(vector literal, bucket literal, norm literal) for the query vector.
+def _query_param(spark, sf_dir, vec_id: int = 0) -> tuple[str, str, str]:
+    """(vector, bucket, norm) of the query vector as SQL literal text.
 
     Bucket and norm are computed driver-side by the bit-identical Python
     twins (`lsh_bucket_py` / `l2_norm_py`) so they enter the plan as plain
@@ -142,8 +143,7 @@ def _query_param(spark, sf_dir, vec_id: int = 0):
     8×64 hyperplane projection, which Catalyst cannot constant-fold
     (higher-order functions are non-foldable)."""
     vals = _query_vec_literal(spark, sf_dir, vec_id)
-    qvec = F.array(*[F.lit(x).cast("double") for x in vals])
-    return qvec, F.lit(lsh_bucket_py(vals)), F.lit(l2_norm_py(vals))
+    return sql_doubles(vals), f"'{lsh_bucket_py(vals)}'", sql_double(l2_norm_py(vals))
 
 
 _SIGNS = hyperplane_signs()
@@ -152,7 +152,7 @@ _DUCK_X = "CAST(e.embedding[i] AS DOUBLE)"
 
 
 def _duck_acc(expr: str) -> str:
-    """Integer micro-quantized sum — mirrors operators.similarity._dsum_terms.
+    """Integer micro-quantized sum — mirrors operators.similarity._dsum.
 
     TRY_CAST + COALESCE are the dirty-data half of the contract: a term
     whose cents exceed int64 (NaN/±Inf from a broken encoder — DuckDB's
@@ -214,9 +214,7 @@ def embed_cosine_topk(spark, sf_dir):
     TakeOrderedAndProject, no shuffle — the exact baseline."""
     b = _bucketed(spark, sf_dir)
     qvec, _qb, qnorm = _query_param(spark, sf_dir)
-    sim = safe_div(dot(F.col("embedding"), qvec), F.col("nrm") * qnorm).alias(
-        "cosine_sim"
-    )
+    sim = safe_div(dot.sql("embedding", qvec), f"nrm * {qnorm}").alias("cosine_sim")
     return (
         b.select("vec_id", sim).orderBy(F.desc("cosine_sim"), "vec_id").limit(10)
     )
@@ -332,11 +330,9 @@ def embed_ann_topk(spark, sf_dir):
     scan prunes to ~1/2^8 of the corpus when bucket is a partition column."""
     b = _bucketed(spark, sf_dir)
     qvec, qbucket, qnorm = _query_param(spark, sf_dir)
-    sim = safe_div(dot(F.col("embedding"), qvec), F.col("nrm") * qnorm).alias(
-        "cosine_sim"
-    )
+    sim = safe_div(dot.sql("embedding", qvec), f"nrm * {qnorm}").alias("cosine_sim")
     return (
-        b.filter(F.col("bucket") == qbucket)
+        b.filter(f"bucket = {qbucket}")
         .select("vec_id", sim)
         .orderBy(F.desc("cosine_sim"), "vec_id")
         .limit(10)
@@ -421,10 +417,7 @@ def embed_near_dup_pairs(spark, sf_dir):
         F.col("nrm").alias("nrm_b"),
     )
     cands = left.join(right, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    sim = safe_div(
-        dot(F.col("vec_a"), F.col("vec_b")),
-        F.col("nrm_a") * F.col("nrm_b"),
-    ).alias("cosine_sim")
+    sim = safe_div(dot.sql("vec_a", "vec_b"), "nrm_a * nrm_b").alias("cosine_sim")
     return (
         cands.select("id_a", "id_b", sim)
         .filter(F.col("cosine_sim") >= 0.9)
@@ -499,9 +492,7 @@ def embed_knn_join(spark, sf_dir):
         "bucket",
         F.col("nrm").alias("nrm_n"),
     )
-    sim = (
-        safe_div(dot(F.col("vec_q"), F.col("vec_n")), F.col("nrm_q") * F.col("nrm_n"))
-    ).alias("cosine_sim")
+    sim = safe_div(dot.sql("vec_q", "vec_n"), "nrm_q * nrm_n").alias("cosine_sim")
     w = Window.partitionBy("id_q").orderBy(F.desc("cosine_sim"), "id_n")
     return (
         left.join(right, "bucket")
@@ -613,22 +604,20 @@ def embed_matryoshka_topk(spark, sf_dir):
     scan + fold + TakeOrderedAndProject — no joins, no shuffle beyond the
     two top-k reductions. Deterministic tie-breaks on vec_id at both
     stages keep the result hash-checkable."""
-    from nyc_taxi_pyspark_spark.operators.similarity import l2_norm_py
-
     b = _bucketed(spark, sf_dir)
     vals = _query_vec_literal(spark, sf_dir)
-    q16 = F.array(*[F.lit(x).cast("double") for x in vals[:_MRL_DIM]])
-    q64 = F.array(*[F.lit(x).cast("double") for x in vals])
-    q16_norm = F.lit(l2_norm_py(list(vals)[:_MRL_DIM]))
-    q64_norm = F.lit(l2_norm_py(list(vals)))
-    e16 = F.slice(F.col("embedding"), 1, _MRL_DIM)
-    coarse = safe_div(dot(e16, q16), l2_norm(e16) * q16_norm)
+    q16 = sql_doubles(vals[:_MRL_DIM])
+    q64 = sql_doubles(vals)
+    q16_norm = sql_double(l2_norm_py(vals[:_MRL_DIM]))
+    q64_norm = sql_double(l2_norm_py(vals))
+    e16 = f"slice(embedding, 1, {_MRL_DIM})"
+    coarse = safe_div(dot.sql(e16, q16), f"{l2_norm.sql(e16)} * {q16_norm}")
     shortlist = (
         b.select("vec_id", "embedding", "nrm", coarse.alias("coarse_sim"))
         .orderBy(F.desc("coarse_sim"), "vec_id")
         .limit(_MRL_SHORTLIST)
     )
-    exact = safe_div(dot(F.col("embedding"), q64), F.col("nrm") * q64_norm)
+    exact = safe_div(dot.sql("embedding", q64), f"nrm * {q64_norm}")
     return (
         shortlist.select("vec_id", exact.alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), "vec_id")
@@ -747,17 +736,11 @@ def embed_ann_multiprobe(spark, sf_dir):
     """Multi-probe ANN top-k: query bucket + Hamming-1 neighbors (9/256
     buckets) — the recall/cost dial between `embed_ann_topk` (1 bucket) and
     `embed_cosine_topk` (full scan)."""
-    from nyc_taxi_pyspark_spark.operators.similarity import ann_topk_multiprobe
-
-    from nyc_taxi_pyspark_spark.operators.similarity import hamming_leq1
-
     b = _bucketed(spark, sf_dir)
     qvec, qbucket, qnorm = _query_param(spark, sf_dir)
-    sim = safe_div(dot(F.col("embedding"), qvec), F.col("nrm") * qnorm).alias(
-        "cosine_sim"
-    )
+    sim = safe_div(dot.sql("embedding", qvec), f"nrm * {qnorm}").alias("cosine_sim")
     return (
-        b.filter(hamming_leq1(F.col("bucket"), qbucket))
+        b.filter(hamming_leq1("bucket", qbucket))
         .select("vec_id", sim)
         .orderBy(F.desc("cosine_sim"), "vec_id")
         .limit(10)
@@ -768,24 +751,24 @@ def embed_ann_multiprobe(spark, sf_dir):
 
 from nyc_taxi_pyspark_spark.operators.similarity import (  # noqa: E402
     N_CENTROIDS,
+    hamming_leq1,
     ivf_assign,
     ivf_cell_py,
 )
-
-_CENTROID_CACHE: dict[str, list] = {}
 
 
 def _centroids(spark, sf_dir):
     """Training-free deterministic centroids: the vectors with ids
     1..N_CENTROIDS, fetched once per table and inlined as literals (same
-    parameter discipline as the query vector). The DuckDB oracle derives
-    the identical centroids from the table itself."""
-    cs = _CENTROID_CACHE.get(sf_dir)
-    if cs is None:
+    parameter discipline as the query vector, and the same shared store
+    entry). The DuckDB oracle derives the identical centroids from the
+    table itself."""
+
+    def build():
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id").between(1, N_CENTROIDS))
-            .filter(finite_vec(F.col("embedding")))  # unindexable guard
+            .filter(finite_vec("embedding"))  # unindexable guard
             .select("vec_id", "embedding")
             .collect()
         )
@@ -794,8 +777,9 @@ def _centroids(spark, sf_dir):
             raise ValueError(
                 f"no centroid vectors (vec_id 1..{N_CENTROIDS}) in {sf_dir}"
             )
-        _CENTROID_CACHE[sf_dir] = cs
-    return cs
+        return cs
+
+    return STATE.get_shared("similarity.centroids", sf_dir, build)
 
 
 def _ivf(spark, sf_dir):
@@ -809,7 +793,7 @@ def _ivf(spark, sf_dir):
             "vec_id",
             "embedding",
             "nrm",
-            ivf_assign(F.col("embedding"), _centroids(spark, sf_dir)).alias("cell"),
+            ivf_assign("embedding", _centroids(spark, sf_dir)).alias("cell"),
         ),
     )
 
@@ -882,15 +866,13 @@ def embed_ivf_topk(spark, sf_dir):
     cell (single-probe). At scale: partition-prune on the literal cell id,
     scan ~1/K of the corpus."""
     vals = _query_vec_literal(spark, sf_dir)
-    qvec = F.array(*[F.lit(x).cast("double") for x in vals])
+    qvec = sql_doubles(vals)
     qcell = ivf_cell_py(vals, _centroids(spark, sf_dir))
-    qnorm = F.lit(l2_norm_py(vals))
+    qnorm = sql_double(l2_norm_py(vals))
     c = _ivf(spark, sf_dir)
-    sim = safe_div(dot(F.col("embedding"), qvec), F.col("nrm") * qnorm).alias(
-        "cosine_sim"
-    )
+    sim = safe_div(dot.sql("embedding", qvec), f"nrm * {qnorm}").alias("cosine_sim")
     return (
-        c.filter(F.col("cell") == F.lit(qcell))
+        c.filter(f"cell = {qcell}")
         .select("vec_id", sim)
         .orderBy(F.desc("cosine_sim"), "vec_id")
         .limit(10)
@@ -961,9 +943,9 @@ def embed_ann_int8(spark, sf_dir):
     as the bucket/norm layout (`_bucketed`)."""
     e = _emb(spark, sf_dir)
     qv = int8_quantize_py(_query_vec_literal(spark, sf_dir))
-    sim = int8_cosine(F.col("qv"), qv).alias("cosine_q8")
+    sim = int8_cosine("qv", qv).alias("cosine_q8")
     return (
-        e.select("vec_id", int8_quantize(F.col("embedding")).alias("qv"))
+        e.select("vec_id", int8_quantize("embedding").alias("qv"))
         .select("vec_id", sim)
         .orderBy(F.desc("cosine_q8"), "vec_id")
         .limit(10)
@@ -1171,7 +1153,7 @@ def embed_semantic_dedup(spark, sf_dir):
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("vec_a"),
         F.col("nrm").alias("nrm_a"),
-        F.explode(probe_buckets(F.col("bucket"))).alias("bucket"),
+        F.explode(probe_buckets("bucket")).alias("bucket"),
     )
     right = b.select(
         F.col("vec_id").alias("id_b"),
@@ -1179,9 +1161,7 @@ def embed_semantic_dedup(spark, sf_dir):
         F.col("nrm").alias("nrm_b"),
         "bucket",
     )
-    sim = (
-        safe_div(dot(F.col("vec_a"), F.col("vec_b")), F.col("nrm_a") * F.col("nrm_b"))
-    ).alias("cosine_sim")
+    sim = safe_div(dot.sql("vec_a", "vec_b"), "nrm_a * nrm_b").alias("cosine_sim")
     pairs = (
         left.join(right, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1427,9 +1407,9 @@ def embed_ivf_train(spark, sf_dir):
     assigned = ivf_train(_emb(spark, sf_dir))
     return assigned.groupBy("cell").agg(
         F.count("*").cast("bigint").alias("n_members"),
-        F.sum(
-            F.aggregate("xq", F.lit(0).cast("bigint"), lambda a, x: a + x)
-        ).cast("bigint").alias("centroid_l1q"),
+        F.sum(F.expr("aggregate(xq, CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
+        .cast("bigint")
+        .alias("centroid_l1q"),
     )
 
 
@@ -1488,9 +1468,7 @@ def embed_pq_codes(spark, sf_dir):
         quantize8,
     )
 
-    vq = _emb(spark, sf_dir).select(
-        "vec_id", quantize8(F.col("embedding")).alias("xq")
-    )
+    vq = _emb(spark, sf_dir).select("vec_id", quantize8("embedding").alias("xq"))
     seeds = _pq_seed_vectors(spark, sf_dir)  # session state (r16)
     return pq_assign(vq, pq_codebooks(seeds)).select(
         "vec_id", "pq_code", "recon_err_q"
@@ -1562,9 +1540,7 @@ def embed_pq_search(spark, sf_dir):
         quantize8,
     )
 
-    vq = _emb(spark, sf_dir).select(
-        "vec_id", quantize8(F.col("embedding")).alias("xq")
-    )
+    vq = _emb(spark, sf_dir).select("vec_id", quantize8("embedding").alias("xq"))
     books = pq_codebooks(_pq_seed_vectors(spark, sf_dir))  # session state
     query_xq = _pq_query_vector(spark, sf_dir)
     if query_xq is None:
@@ -1646,12 +1622,12 @@ def embed_ivfpq_search(spark, sf_dir):
     ivf = _ivf(spark, sf_dir)
     vals = _query_vec_literal(spark, sf_dir)
     qcell = ivf_cell_py(vals, _centroids(spark, sf_dir))
-    vq = ivf.select("vec_id", "cell", quantize8(F.col("embedding")).alias("xq"))
+    vq = ivf.select("vec_id", "cell", quantize8("embedding").alias("xq"))
     books = pq_codebooks(_pq_seed_vectors(spark, sf_dir))  # session state
     query_xq = _pq_query_vector(spark, sf_dir)
     if query_xq is None:
         raise ValueError(f"query vector vec_id=0 not found in {sf_dir}")
-    pruned = vq.filter(F.col("cell") == F.lit(qcell))
+    pruned = vq.filter(f"cell = {qcell}")
     return pq_adc_topk(pq_assign(pruned, books), pq_adc_lut(query_xq, books))
 
 
@@ -1692,8 +1668,8 @@ def embed_dim_stats(spark, sf_dir):
     repartition was a wasted shuffle (A/B 0.548 -> 0.327 s)."""
     e = load_table(spark, sf_dir, "embeddings")
     x = F.col("x")
-    q_mean = F.sum(qfloor(x * F.lit(1e14))).cast("double") / F.lit(1e14)
-    q_sq = F.sum(qfloor(x * x * F.lit(1e12))).cast("double") / F.lit(1e12)
+    q_mean = F.sum(qfloor(f"x * {sql_double(1e14)}")).cast("double") / F.lit(1e14)
+    q_sq = F.sum(qfloor(f"x * x * {sql_double(1e12)}")).cast("double") / F.lit(1e12)
     n = F.count(F.lit(1))
     mean = q_mean / n
     return (
@@ -1759,7 +1735,7 @@ def embed_outlier_docs(spark, sf_dir):
         .select((F.col("pos") + 1).alias("dim"), x.alias("x"))
         .groupBy("dim")
         .agg(
-            F.sum(qfloor(F.col("x") * F.lit(1e14))).alias("s_q"),
+            F.sum(qfloor(f"x * {sql_double(1e14)}")).alias("s_q"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -1768,23 +1744,16 @@ def embed_outlier_docs(spark, sf_dir):
     )
     # 64-row centroid → ordered array literal via a 1-row broadcast
     cvec = centroid.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))),
-            lambda s: s.getField("m"),
-        ).alias("__c")
+        F.expr("transform(array_sort(collect_list(struct(dim, m))), s -> s.m)").alias(
+            "__c"
+        )
     )
-    diff = F.zip_with(
-        F.col("embedding"),
-        F.col("__c"),
-        lambda a, b: qfloor(
-            (a.cast("double") - b) * (a.cast("double") - b) * F.lit(1e12)
-        ),
+    term = qfloor.sql(
+        f"(CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b) * {sql_double(1e12)}"
     )
-    dist2 = (
-        F.aggregate(
-            diff, F.lit(0).cast("bigint"), lambda acc, t: acc + t
-        ).cast("double")
-        / F.lit(1e12)
+    dist2 = F.expr(
+        f"CAST(aggregate(zip_with(embedding, __c, (a, b) -> {term}),"
+        f" CAST(0 AS BIGINT), (acc, t) -> acc + t) AS DOUBLE) / {sql_double(1e12)}"
     )
     return (
         e.join(F.broadcast(cvec))
@@ -1865,10 +1834,7 @@ def embed_contrastive_pairs(spark, sf_dir):
         .select(
             "a_id",
             "vec_id",
-            safe_div(
-                dot(F.col("embedding"), F.col("a_vec")),
-                F.col("nrm") * F.col("a_nrm"),
-            ).alias("cosine_sim"),
+            safe_div(dot.sql("embedding", "a_vec"), "nrm * a_nrm").alias("cosine_sim"),
         )
     )
     w_pos = Window.partitionBy("a_id").orderBy(
@@ -1931,9 +1897,7 @@ def embed_filtered_topk(spark, sf_dir):
     added); this query pins the exact-path contract."""
     b = _bucketed(spark, sf_dir).filter(F.col("label").isin(2, 3))
     qvec, _qb, qnorm = _query_param(spark, sf_dir)
-    sim = safe_div(dot(F.col("embedding"), qvec), F.col("nrm") * qnorm).alias(
-        "cosine_sim"
-    )
+    sim = safe_div(dot.sql("embedding", qvec), f"nrm * {qnorm}").alias("cosine_sim")
     return (
         b.select("vec_id", sim)
         .orderBy(F.desc("cosine_sim"), "vec_id")
@@ -2077,11 +2041,10 @@ def embed_power_iteration_pc1(spark, sf_dir):
             load_table(spark, sf_dir, "embeddings"), spark
         ).select(
             "vec_id",
-            F.transform(
-                F.sequence(F.lit(1), F.lit(DIM)),
-                lambda i: qfloor(
-                    F.try_element_at("embedding", i).cast("double") * _PI_Q
-                ),
+            F.expr(
+                f"transform(sequence(1, {DIM}), i -> "
+                + qfloor.sql(f"CAST(try_element_at(embedding, i) AS DOUBLE) * {_PI_Q}")
+                + ")"
             ).alias("qv"),
         ),
     )
@@ -2105,12 +2068,7 @@ def embed_power_iteration_pc1(spark, sf_dir):
     g = cut_lineage(
         eq.select(
             F.posexplode(
-                F.flatten(
-                    F.transform(
-                        "qv",
-                        lambda a: F.transform("qv", lambda b: a * b),
-                    )
-                )
+                F.expr("flatten(transform(qv, a -> transform(qv, b -> a * b)))")
             ).alias("pos", "t")
         )
         .groupBy("pos")
@@ -2319,9 +2277,7 @@ def search_hybrid_rrf(spark, sf_dir):
     )
     b = _bucketed(spark, sf_dir)
     qvec, _qb, qnorm = _query_param(spark, sf_dir)
-    sim = safe_div(dot(F.col("embedding"), qvec), F.col("nrm") * qnorm).alias(
-        "cosine_sim"
-    )
+    sim = safe_div(dot.sql("embedding", qvec), f"nrm * {qnorm}").alias("cosine_sim")
     sem_top = (
         b.select("vec_id", sim)
         .orderBy(F.desc("cosine_sim"), "vec_id")
@@ -2427,7 +2383,7 @@ def embed_centroid_drift(spark, sf_dir):
     d = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("i", "x")
     )
-    qe = qfloor(F.col("x").cast("double") * F.lit(1e6))
+    qe = qfloor(f"CAST(x AS DOUBLE) * {sql_double(1e6)}")
     even = F.col("vec_id") % 2 == 0
     dims = d.groupBy("label", "i").agg(
         F.sum(F.when(even, qe).otherwise(F.lit(0))).alias("sa"),
@@ -2436,10 +2392,7 @@ def embed_centroid_drift(spark, sf_dir):
 
     def fold(xa: str, xb: str) -> F.Column:
         return F.sum(
-            qfloor(
-                (F.col(xa).cast("double") * F.col(xb).cast("double"))
-                / F.lit(1e6)
-            )
+            qfloor(f"(CAST({xa} AS DOUBLE) * CAST({xb} AS DOUBLE)) / {sql_double(1e6)}")
         ).cast("double")
 
     c = dims.groupBy("label").agg(

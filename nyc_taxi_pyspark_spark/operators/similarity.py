@@ -7,19 +7,43 @@ Scale design:
     aggregate) — JVM-side, no Python, no shuffle. Accumulation is
     micro-quantized int64 (see _SCALE below) so the value is
     association-order-independent and bit-identical on every engine.
+  - Kernels are SQL text. Every kernel builds its whole expression as one
+    SQL string in plain Python and hands it to the JVM as ONE ``F.expr``;
+    ``kernel.sql(...)`` returns the text itself, so kernels compose as text
+    (a cosine is one expression, not three). Inputs are SQL text too: a
+    column name, or an expression such as ``"slice(embedding, 1, 16)"``.
+    Why: each PySpark Column operator (a literal, a cast, a ``+``, a lambda
+    body) is one Py4J round trip to the driver JVM, and a 64-dim literal
+    vector, 8 hyperplanes × 64 signs, 12 salted hash tables or 8 literal
+    centroids made plan construction — not execution — the dominant cost.
+    Measured at sf0.001 on 4 cores, counting the building thread's calls:
+    with a Column per component, building ``embed_cosine_topk`` in a fresh
+    session took 6,011 round trips and 1.55 s (as text: 124 and 0.48 s),
+    and one warm build of the 32 similarity queries took 138,984 round
+    trips (as text: 11,718), 53,569 of them in ``embed_ann_near_recall``.
+    The text form yields the same optimized plan up to lambda-variable
+    names (tests/test_py4j_budget.py holds the budgets).
+  - Literal rule: a double is written ``f"{x!r}D"`` (Python's shortest
+    round-trip repr plus Spark's DOUBLE suffix — parses back to the same
+    IEEE value, ``-0.0`` and subnormals included); NaN/±Inf are
+    ``CAST('NaN' AS DOUBLE)`` / ``CAST('Infinity' AS DOUBLE)``, which the
+    optimizer folds to the same literal. See :func:`sql_double`.
   - Brute-force query-vs-corpus top-k is a scan + TakeOrderedAndProject:
     O(n·d) work, no shuffle, perfectly parallel — the right baseline even at
     100 TB when k is small.
   - The LSH variant prunes the scan to one hash bucket. Hyperplane signs are
     derived from md5 parity (deterministic, engine-portable, no RNG state),
     so the same buckets come out of Spark, DuckDB, or plain Python.
-  - All-pairs similarity joins should LSH-bucket first (join on bucket),
-    never crossJoin; ``bucket_join_candidates`` provides that shape.
+  - All-pairs similarity joins LSH-bucket first (equi-join on bucket),
+    never crossJoin.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import math
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +61,39 @@ N_PLANES = 8
 _SCALE = 1e14
 
 
+def sql_double(x: float) -> str:
+    """A double as SQL text that Spark parses back to the same IEEE value."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def sql_doubles(vals) -> str:
+    """A literal ``array<double>`` as SQL text."""
+    return "array(" + ", ".join(sql_double(v) for v in vals) + ")"
+
+
+def _sql_ints(vals, suffix: str = "") -> str:
+    """A literal integer array (``suffix="L"``: ``array<bigint>``)."""
+    return "array(" + ", ".join(f"{int(v)}{suffix}" for v in vals) + ")"
+
+
+def _kernel(text: Callable[..., str]) -> Callable[..., Column]:
+    """Column kernel from its SQL-text builder: the whole expression is one
+    ``F.expr`` (one Py4J round trip), and ``kernel.sql(...)`` is the text
+    builder itself, for composing kernels before anything reaches the JVM."""
+
+    @functools.wraps(text)
+    def column(*args, **kwargs) -> Column:
+        return F.expr(text(*args, **kwargs))
+
+    column.sql = text
+    return column
+
+
 def hyperplane_signs(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[int]]:
     """Deterministic ±1 hyperplanes: sign[j][i] = parity of the first hex
     digit of md5('<j>|<i>'). Reproducible in any engine or language — the
@@ -50,19 +107,18 @@ def hyperplane_signs(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[int]
     ]
 
 
+_PLANES = hyperplane_signs()
+
+
 def dsum_py(terms: list[float]) -> float:
-    """Python twin of :func:`_dsum_terms` — bit-identical by construction:
+    """Python twin of :func:`_dsum` — bit-identical by construction:
     float64 products, ``math.floor(t * 1e14)`` (same IEEE ops as Spark's
     FLOOR on double), exact int accumulation, double divide at the end."""
-    import math
-
     return float(sum(math.floor(t * _SCALE) for t in terms)) / _SCALE
 
 
 def l2_norm_py(vals: list[float]) -> float:
     """Python twin of :func:`l2_norm` (driver-side query-parameter path)."""
-    import math
-
     return math.sqrt(dsum_py([x * x for x in vals]))
 
 
@@ -71,9 +127,7 @@ def lsh_bucket_py(
 ) -> str:
     """Python twin of :func:`lsh_bucket` — used to turn a query vector's
     bucket into a plan-time literal (at scale: static partition pruning)."""
-    import math
-
-    planes = planes or hyperplane_signs()
+    planes = planes or _PLANES
     bits = []
     for p in planes:
         acc = sum(math.floor((x * s) * _SCALE) for x, s in zip(vals, p))
@@ -82,9 +136,27 @@ def lsh_bucket_py(
 
 
 _TERM_LIM = float(2**63 - 1024)  # per-term int64 headroom
+_S = sql_double(_SCALE)
 
 
-def _dsum_terms(terms: Column) -> Column:
+@_kernel
+def qfloor(expr: str) -> str:
+    """Guarded micro-quantizer: floor(expr) as bigint, 0 when expr sits
+    outside int64 range (NaN, ±Inf, or an absurd finite magnitude) — the
+    same non-finite contract as :func:`_dsum`'s fold term. Without
+    the guard, floor saturates ±Inf to ±Long.MAX and the NEXT integer
+    add/multiply aborts the whole job under ANSI mode (round-11
+    dirty-parity audit: one broken encoder component killed six
+    similarity queries). Oracle twin:
+    ``COALESCE(TRY_CAST(FLOOR(expr) AS BIGINT), 0)``."""
+    return (
+        f"CAST(CASE WHEN ({expr}) >= {sql_double(-_TERM_LIM)}"
+        f" AND ({expr}) <= {sql_double(_TERM_LIM)}"
+        f" THEN floor({expr}) ELSE 0 END AS BIGINT)"
+    )
+
+
+def _dsum(terms: str) -> str:
     """Order-independent sum of an array of doubles via integer folding
     (micro-quantized at 1e-14; see _SCALE note above).
 
@@ -92,35 +164,29 @@ def _dsum_terms(terms: Column) -> Column:
     folded to 0 (Spark floor(NaN)=0), but an ±Inf term floored to
     ±Long.MAX and ABORTED the whole job on the next ANSI add — one broken
     encoder component killing every similarity query over the corpus. The
-    between-guard maps ANY term outside int64 range (NaN, ±Inf, or a
+    qfloor guard maps ANY term outside int64 range (NaN, ±Inf, or a
     physically absurd |x|>2^63/1e14 component) to a 0 contribution, which
     is bit-identical to the oracle twin's ``SUM(TRY_CAST(...))`` skipping
     the NULL (catalog.similarity._duck_acc)."""
-    q = lambda x: x * F.lit(_SCALE)  # noqa: E731
-    return F.aggregate(
-        terms,
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc
-        + F.when(q(x).between(-_TERM_LIM, _TERM_LIM), F.floor(q(x)))
-        .otherwise(F.lit(0))
-        .cast("bigint"),
-        lambda acc: acc.cast("double") / F.lit(_SCALE),
+    return (
+        f"aggregate({terms}, CAST(0 AS BIGINT),"
+        f" (acc, t) -> acc + {qfloor.sql(f't * {_S}')},"
+        f" acc -> CAST(acc AS DOUBLE) / {_S})"
     )
 
 
-def dot(a: Column, b: Column) -> Column:
-    return _dsum_terms(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    )
+@_kernel
+def dot(a: str, b: str) -> str:
+    return _dsum(f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))")
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        _dsum_terms(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
-    )
+@_kernel
+def l2_norm(a: str) -> str:
+    return f"sqrt({_dsum(f'transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))')})"
 
 
-def safe_div(num: Column, den: Column) -> Column:
+@_kernel
+def safe_div(num: str, den: str) -> str:
     """NULL instead of ANSI DIVIDE_BY_ZERO on a degenerate denominator.
     A zero-norm vector has no defined cosine; under Spark 4's default
     ANSI mode a bare division would abort the whole job on the first
@@ -128,17 +194,18 @@ def safe_div(num: Column, den: Column) -> Column:
     answer (and DuckDB's native float-division result), and in a DESC
     ordering it sorts NULLS LAST, so degenerate candidates can never
     displace a genuine top-k hit (tests/test_degenerate_rows_sweep.py
-    drives the whole catalog over zero vectors to pin this)."""
-    from nyc_taxi_pyspark_spark.functions.exact import sdiv
-
-    return sdiv(num, den)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return safe_div(dot(a, b), l2_norm(a) * l2_norm(b))
+    drives the whole catalog over zero vectors to pin this). Same
+    expression as ``functions.exact.sdiv``."""
+    return f"CASE WHEN ({den}) != 0 THEN ({num}) / ({den}) END"
 
 
-def finite_vec(vec: Column) -> Column:
+@_kernel
+def cosine(a: str, b: str) -> str:
+    return safe_div.sql(dot.sql(a, b), f"{l2_norm.sql(a)} * {l2_norm.sql(b)}")
+
+
+@_kernel
+def finite_vec(vec: str) -> str:
     """Indexability predicate: every component finite. A vector with a
     NaN/Inf component (a broken encoder) cannot serve as a centroid, PQ
     seed, or k-means seed — its distances are undefined and the Python
@@ -146,113 +213,54 @@ def finite_vec(vec: Column) -> Column:
     CORPUS row it may stay: the JVM floor-fold maps it to NULL-or-garbage
     scores that sort last (safe_div contract), but parameter collections
     must filter on this predicate (degenerate-row sweep pins it)."""
-    x = lambda c: c.cast("double")  # noqa: E731
-    return ~F.exists(
-        vec,
-        lambda c: F.isnan(x(c)) | (F.abs(x(c)) == F.lit(float("inf"))),
-    )
-
-
-def signed_projection(vec: Column, signs: list[int]) -> Column:
-    """Dot product against a ±1 hyperplane as decimal-exact signed sum."""
-    terms = F.zip_with(
-        vec,
-        F.array(*[F.lit(s) for s in signs]),
-        lambda x, s: x.cast("double") * s.cast("double"),
-    )
-    return _dsum_terms(terms)
-
-
-def lsh_bucket(vec: Column, planes: list[list[int]] | None = None) -> Column:
-    """Bit-string bucket id: one bit per hyperplane, 1 iff projection > 0."""
-    planes = planes or hyperplane_signs()
-    bits = [
-        F.when(signed_projection(vec, p) > 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in planes
-    ]
-    return F.concat(*bits)
-
-
-def bucket_join_candidates(
-    corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """All-pairs candidate generation by LSH bucket equi-join (a < b) — the
-    scalable alternative to crossJoin for near-dup embedding search.
-
-    Each side carries its precomputed L2 norm (``nrm_a``/``nrm_b``): norms
-    are computed once per vector before the join instead of once per
-    candidate pair after it — same bits, O(n) instead of O(candidates)
-    norm folds."""
-    b = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        lsh_bucket(F.col(vec_col)).alias("bucket"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-    )
-    left = b.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        F.col("bucket"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    right = b.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        F.col("bucket"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    return left.join(right, "bucket").filter(F.col("id_a") < F.col("id_b"))
-
-
-def hamming_leq1(a: Column, b: Column, n_bits: int = N_PLANES) -> Column:
-    """Bit-string Hamming distance ≤ 1, as a row-level expression."""
-    diffs = [
-        F.when(
-            F.substring(a, j + 1, 1) != F.substring(b, j + 1, 1), F.lit(1)
-        ).otherwise(F.lit(0))
-        for j in range(n_bits)
-    ]
-    total = diffs[0]
-    for d in diffs[1:]:
-        total = total + d
-    return total <= 1
-
-
-def ann_topk_multiprobe(
-    corpus: DataFrame,
-    query_vec: Column,
-    query_bucket: Column,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_norm: Column | None = None,
-) -> DataFrame:
-    """Multi-probe ANN: scan the query's bucket plus all Hamming-1 neighbor
-    buckets (9 of 256 here) — the standard recall/cost dial for hyperplane
-    LSH. At scale with `bucket` as a partition column this is a 9-partition
-    IN-list prune instead of a full scan."""
-    bucketed = corpus.withColumn("bucket", lsh_bucket(F.col(vec_col)))
-    sim = cosine_sim_expr(vec_col, query_vec, query_norm).alias("cosine_sim")
     return (
-        bucketed.filter(hamming_leq1(F.col("bucket"), query_bucket))
-        .select(F.col(id_col), sim)
-        .orderBy(F.desc("cosine_sim"), id_col)
-        .limit(k)
+        f"NOT exists({vec}, c -> isnan(CAST(c AS DOUBLE))"
+        f" OR abs(CAST(c AS DOUBLE)) = {sql_double(math.inf)})"
     )
 
 
-def probe_buckets(bucket: Column, n_bits: int = N_PLANES) -> Column:
+def _signed_projection(vec: str, signs: list[int]) -> str:
+    """Dot product against a ±1 hyperplane as a micro-quantized signed sum."""
+    return _dsum(
+        f"zip_with({vec}, {_sql_ints(signs)},"
+        " (x, s) -> CAST(x AS DOUBLE) * CAST(s AS DOUBLE))"
+    )
+
+
+@_kernel
+def lsh_bucket(vec: str, planes: list[list[int]] | None = None) -> str:
+    """Bit-string bucket id: one bit per hyperplane, 1 iff projection > 0."""
+    bits = ", ".join(
+        f"CASE WHEN {_signed_projection(vec, p)} > 0 THEN '1' ELSE '0' END"
+        for p in planes or _PLANES
+    )
+    return f"concat({bits})"
+
+
+@_kernel
+def hamming_leq1(a: str, b: str, n_bits: int = N_PLANES) -> str:
+    """Bit-string Hamming distance ≤ 1, as a row-level expression."""
+    diffs = " + ".join(
+        f"CASE WHEN substring({a}, {j + 1}, 1) != substring({b}, {j + 1}, 1)"
+        " THEN 1 ELSE 0 END"
+        for j in range(n_bits)
+    )
+    return f"({diffs}) <= 1"
+
+
+@_kernel
+def probe_buckets(bucket: str, n_bits: int = N_PLANES) -> str:
     """Array of the bucket itself plus its ``n_bits`` Hamming-1 neighbors —
     the multiprobe set, as a row-level expression over the bit-string."""
-    def flip(j: int) -> Column:
-        bit = F.substring(bucket, j + 1, 1)
-        return F.concat(
-            F.substring(bucket, 1, j),
-            F.when(bit == "1", F.lit("0")).otherwise(F.lit("1")),
-            F.substring(bucket, j + 2, n_bits - j - 1),
+
+    def flip(j: int) -> str:
+        return (
+            f"concat(substring({bucket}, 1, {j}),"
+            f" CASE WHEN substring({bucket}, {j + 1}, 1) = '1' THEN '0' ELSE '1' END,"
+            f" substring({bucket}, {j + 2}, {n_bits - j - 1}))"
         )
 
-    return F.array(bucket, *[flip(j) for j in range(n_bits)])
+    return f"array({bucket}, {', '.join(flip(j) for j in range(n_bits))})"
 
 
 def ann_recall_at_k(
@@ -290,9 +298,7 @@ def ann_recall_at_k(
             F.col("bucket").alias("q_bucket"),
         )
     )
-    sim = (
-        safe_div(dot(F.col(vec_col), F.col("q_vec")), F.col("nrm") * F.col("q_nrm"))
-    ).alias("sim")
+    sim = safe_div(dot.sql(vec_col, "q_vec"), "nrm * q_nrm").alias("sim")
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.col(id_col))
     exact = (
         bucketed.join(queries, how="cross")
@@ -305,7 +311,7 @@ def ann_recall_at_k(
         "q_id",
         "q_vec",
         "q_nrm",
-        F.explode(probe_buckets(F.col("q_bucket"))).alias("bucket"),
+        F.explode(probe_buckets("q_bucket")).alias("bucket"),
     )
     ann = (
         bucketed.join(F.broadcast(probes), "bucket")
@@ -370,9 +376,7 @@ def mrl_recall_panel(
         )
     )
     joined = df.join(queries, how="cross")
-    full_sim = (
-        safe_div(dot(F.col(vec_col), F.col("q_vec")), F.col("nrm") * F.col("q_nrm"))
-    ).alias("sim")
+    full_sim = safe_div(dot.sql(vec_col, "q_vec"), "nrm * q_nrm").alias("sim")
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.col(id_col))
     exact = (
         joined.select("q_id", id_col, full_sim)
@@ -380,11 +384,11 @@ def mrl_recall_panel(
         .filter(F.col("rk") <= k)
         .select("q_id", id_col)
     )
-    e_pre = F.slice(F.col(vec_col), 1, mrl_dim)
-    q_pre = F.slice(F.col("q_vec"), 1, mrl_dim)
-    coarse_sim = safe_div(dot(e_pre, q_pre), l2_norm(e_pre) * l2_norm(q_pre)).alias(
-        "sim"
-    )
+    e_pre = f"slice({vec_col}, 1, {mrl_dim})"
+    q_pre = f"slice(q_vec, 1, {mrl_dim})"
+    coarse_sim = safe_div(
+        dot.sql(e_pre, q_pre), f"{l2_norm.sql(e_pre)} * {l2_norm.sql(q_pre)}"
+    ).alias("sim")
     short = (
         joined.select(
             "q_id", id_col, vec_col, "nrm", "q_vec", "q_nrm", coarse_sim
@@ -434,16 +438,15 @@ def hyperplane_signs_salted(
     ]
 
 
-def multi_table_buckets(vec: Column, n_tables: int) -> Column:
+@_kernel
+def multi_table_buckets(vec: str, n_tables: int) -> str:
     """Array of ``n_tables`` independent LSH bucket strings for one vector
     (tables salted 0..n_tables-1). At 100 TB these are write-time columns —
     the classic T-fold memory/recall trade of multi-table LSH."""
-    return F.array(
-        *[
-            lsh_bucket(vec, hyperplane_signs_salted(str(t)))
-            for t in range(n_tables)
-        ]
+    tables = ", ".join(
+        lsh_bucket.sql(vec, hyperplane_signs_salted(str(t))) for t in range(n_tables)
     )
+    return f"array({tables})"
 
 
 def ann_near_recall(
@@ -483,9 +486,7 @@ def ann_near_recall(
             F.col("nrm").alias("q_nrm"),
         )
     )
-    sim = (
-        safe_div(dot(F.col(vec_col), F.col("q_vec")), F.col("nrm") * F.col("q_nrm"))
-    ).alias("sim")
+    sim = safe_div(dot.sql(vec_col, "q_vec"), "nrm * q_nrm").alias("sim")
     ground = (
         base.join(queries, how="cross")
         .select("q_id", id_col, sim)
@@ -496,9 +497,7 @@ def ann_near_recall(
     # materialization the 12×8×64-literal projection executes twice.
     tables = base.select(
         id_col,
-        F.posexplode(multi_table_buckets(F.col(vec_col), n_tables)).alias(
-            "tbl", "bucket"
-        ),
+        F.posexplode(multi_table_buckets(vec_col, n_tables)).alias("tbl", "bucket"),
     ).localCheckpoint(eager=True)
     # Probes derive from the exploded (tbl, bucket) layout — cheap string
     # flips — the probe expansion never needs the vectors.
@@ -506,7 +505,7 @@ def ann_near_recall(
         tables.select(
             F.col(id_col).alias("q_id"),
             "tbl",
-            F.explode(probe_buckets(F.col("bucket"))).alias("bucket"),
+            F.explode(probe_buckets("bucket")).alias("bucket"),
         )
     )
     candidates = (
@@ -534,20 +533,27 @@ def ann_near_recall(
 N_CENTROIDS = 8
 
 
-def sq_dist(vec: Column, lit_vals: list[float]) -> Column:
+@_kernel
+def sq_dist(vec: str, lit_vals: list[float]) -> str:
     """Micro-quantized squared L2 distance to a literal centroid — the same
     int64-fold portability contract as dot()/l2_norm()."""
-    cent = F.array(*[F.lit(v).cast("double") for v in lit_vals])
-    return _dsum_terms(
-        F.zip_with(
-            vec,
-            cent,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        )
+    return _dsum(
+        f"zip_with({vec}, {sql_doubles(lit_vals)},"
+        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y))"
     )
 
 
-def ivf_assign(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
+def _cell_structs(vec: str, centroids: list[tuple[int, list[float]]]) -> str:
+    """array of (d, cid) structs: squared distance to each literal centroid."""
+    structs = ", ".join(
+        f"struct({sq_dist.sql(vec, vals)} AS d, {int(cid)} AS cid)"
+        for cid, vals in centroids
+    )
+    return f"array({structs})"
+
+
+@_kernel
+def ivf_assign(vec: str, centroids: list[tuple[int, list[float]]]) -> str:
     """Nearest-centroid cell id: argmin over squared distances with
     deterministic ties (smallest centroid id) via lexicographic struct min.
 
@@ -557,26 +563,15 @@ def ivf_assign(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
     ids) so every engine — and the DuckDB oracle — derives identical cells;
     swapping in MLlib KMeans centroids changes recall, not the plan shape.
     """
-    structs = [
-        F.struct(sq_dist(vec, vals).alias("d"), F.lit(cid).alias("cid"))
-        for cid, vals in centroids
-    ]
-    return F.array_min(F.array(*structs))["cid"]
+    return f"array_min({_cell_structs(vec, centroids)}).cid"
 
 
-def ivf_cells_ranked(
-    vec: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
+@_kernel
+def ivf_cells_ranked(vec: str, centroids: list[tuple[int, list[float]]]) -> str:
     """All cell ids ordered by ascending squared distance (ties by cell id)
     — the multiprobe order for IVF: ``slice(ranked, 1, n_probe)`` is the
     probe set, and probing all cells degenerates to the exhaustive scan."""
-    structs = [
-        F.struct(sq_dist(vec, vals).alias("d"), F.lit(cid).alias("cid"))
-        for cid, vals in centroids
-    ]
-    return F.transform(
-        F.array_sort(F.array(*structs)), lambda s: s["cid"]
-    )
+    return f"transform(array_sort({_cell_structs(vec, centroids)}), s -> s.cid)"
 
 
 def ivf_recall_at_k(
@@ -607,12 +602,10 @@ def ivf_recall_at_k(
             F.col(id_col).alias("q_id"),
             F.col(vec_col).alias("q_vec"),
             F.col("nrm").alias("q_nrm"),
-            ivf_cells_ranked(F.col(vec_col), centroids).alias("cells_ranked"),
+            ivf_cells_ranked(vec_col, centroids).alias("cells_ranked"),
         )
     )
-    sim = (
-        safe_div(dot(F.col(vec_col), F.col("q_vec")), F.col("nrm") * F.col("q_nrm"))
-    ).alias("sim")
+    sim = safe_div(dot.sql(vec_col, "q_vec"), "nrm * q_nrm").alias("sim")
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.col(id_col))
     exact = (
         base.join(queries.drop("cells_ranked"), how="cross")
@@ -661,8 +654,6 @@ def ivf_recall_at_k(
 
 def sq_dist_py(vals: list[float], cent: list[float]) -> float:
     """Python twin of :func:`sq_dist` (bit-identical IEEE ops)."""
-    import math
-
     return dsum_py([(x - y) * (x - y) for x, y in zip(vals, cent)])
 
 
@@ -676,7 +667,8 @@ def ivf_cell_py(vals: list[float], centroids: list[tuple[int, list[float]]]) -> 
 Q_LEVELS = 127
 
 
-def int8_quantize(vec: Column) -> Column:
+@_kernel
+def int8_quantize(vec: str) -> str:
     """Symmetric per-vector int8 scalar quantization: q_i = round-half-up of
     x_i · 127 / max|x| (0-vector ⇒ all zeros).
 
@@ -689,52 +681,44 @@ def int8_quantize(vec: Column) -> Column:
     also the storage play: 64 bytes/vector instead of 256/512, 4-8× more
     vectors per scan byte and per shuffle byte.
     """
-    maxabs = F.array_max(F.transform(vec, lambda x: F.abs(x.cast("double"))))
-    return F.when(
-        maxabs > 0,
-        F.transform(
-            vec,
-            lambda x: F.floor(
-                x.cast("double") * F.lit(float(Q_LEVELS)) / maxabs + F.lit(0.5)
-            ).cast("bigint"),
-        ),
-    ).otherwise(F.transform(vec, lambda x: F.lit(0).cast("bigint")))
+    maxabs = f"array_max(transform({vec}, y -> abs(CAST(y AS DOUBLE))))"
+    return (
+        f"CASE WHEN {maxabs} > 0 THEN transform({vec}, x -> CAST(floor("
+        f"CAST(x AS DOUBLE) * {sql_double(Q_LEVELS)} / {maxabs} + {sql_double(0.5)}"
+        f") AS BIGINT)) ELSE transform({vec}, x -> CAST(0 AS BIGINT)) END"
+    )
 
 
 def int8_quantize_py(vals: list[float]) -> list[int]:
     """Python twin of :func:`int8_quantize` (bit-identical IEEE ops) for
     driver-side query parameters."""
-    import math
-
     m = max(abs(float(x)) for x in vals) if vals else 0.0
     if m <= 0:
         return [0] * len(vals)
     return [math.floor(float(x) * float(Q_LEVELS) / m + 0.5) for x in vals]
 
 
-def int_dot(a: Column, b: Column) -> Column:
+@_kernel
+def int_dot(a: str, b: str) -> str:
     """Exact int64 dot product of two integer arrays — associative, so
     order-independent with no quantization discipline needed."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
+        " CAST(0 AS BIGINT), (acc, t) -> acc + t)"
     )
 
 
-def int8_cosine(qvec_col: Column, query_q: list[int]) -> Column:
+@_kernel
+def int8_cosine(qvec: str, query_q: list[int]) -> str:
     """Quantized cosine vs a literal quantized query vector.
 
     cos = Σqa·qb / (√Σqa² · √Σqb²): the per-vector scales cancel, so this
     is pure integer arithmetic up to two final sqrt/divide ops on exact
     integers — deterministic IEEE on every engine."""
-    import math
-
-    qlit = F.array(*[F.lit(int(v)).cast("bigint") for v in query_q])
     qn = math.sqrt(sum(v * v for v in query_q))
-    return safe_div(
-        int_dot(qvec_col, qlit).cast("double"),
-        F.sqrt(int_dot(qvec_col, qvec_col).cast("double")) * F.lit(qn),
+    return safe_div.sql(
+        f"CAST({int_dot.sql(qvec, _sql_ints(query_q, 'L'))} AS DOUBLE)",
+        f"sqrt(CAST({int_dot.sql(qvec, qvec)} AS DOUBLE)) * {sql_double(qn)}",
     )
 
 
@@ -744,62 +728,47 @@ Q8 = 10**8  # component quantization scale for k-means training
 Q14 = 10**14  # distance-term quantization scale (same as _SCALE)
 
 
-def qfloor(expr: Column) -> Column:
-    """Guarded micro-quantizer: floor(expr) as bigint, 0 when expr sits
-    outside int64 range (NaN, ±Inf, or an absurd finite magnitude) — the
-    same non-finite contract as :func:`_dsum_terms`'s fold term. Without
-    the guard, floor saturates ±Inf to ±Long.MAX and the NEXT integer
-    add/multiply aborts the whole job under ANSI mode (round-11
-    dirty-parity audit: one broken encoder component killed six
-    similarity queries). Oracle twin:
-    ``COALESCE(TRY_CAST(FLOOR(expr) AS BIGINT), 0)``."""
-    return (
-        F.when(expr.between(-_TERM_LIM, _TERM_LIM), F.floor(expr))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-    )
-
-
-def quantize8(vec: Column) -> Column:
+@_kernel
+def quantize8(vec: str) -> str:
     """Components as exact micro-integers: floor(x · 1e8). float32 → double
     is exact, the scaled floor is deterministic IEEE, so every engine derives
     the identical integer vector — the foundation that makes iterative
     k-means hash-checkable. Non-finite components quantize to 0 (qfloor)."""
-    return F.transform(vec, lambda x: qfloor(x.cast("double") * F.lit(float(Q8))))
+    return f"transform({vec}, x -> {qfloor.sql(f'CAST(x AS DOUBLE) * {sql_double(Q8)}')})"
 
 
-def kmeans_dist_q(xq: Column, comps: list[float]) -> Column:
+@_kernel
+def kmeans_dist_q(xq: str, comps: list[float]) -> str:
     """Quantized squared L2 distance to a literal centroid: per-component
     term floor(d²·1e14) as bigint, summed exactly (order-free). Comparisons
     between cells are therefore pure integer comparisons — no float-sum
     nondeterminism anywhere in the argmin."""
-    c_arr = F.array(*[F.lit(float(c)) for c in comps])
-    terms = F.zip_with(
-        xq,
-        c_arr,
-        lambda x, c: qfloor(
-            (x.cast("double") / F.lit(float(Q8)) - c)
-            * (x.cast("double") / F.lit(float(Q8)) - c)
-            * F.lit(float(Q14))
-        ),
+    d = f"(CAST(x AS DOUBLE) / {sql_double(Q8)} - c)"
+    term = qfloor.sql(f"{d} * {d} * {sql_double(Q14)}")
+    return (
+        f"aggregate(zip_with({xq}, {sql_doubles(comps)}, (x, c) -> {term}),"
+        " CAST(0 AS BIGINT), (acc, t) -> acc + t)"
     )
-    return F.aggregate(terms, F.lit(0).cast("bigint"), lambda a, t: a + t)
+
+
+def _argmin_code(xq: str, book: list[tuple[int, list[float]]]) -> str:
+    """(d, c) struct of the nearest literal centroid: array_min over
+    (dist_q, code) structs — lexicographic ⇒ deterministic tie-break on
+    the code."""
+    pairs = ", ".join(
+        f"struct({kmeans_dist_q.sql(xq, comps)} AS d, {int(code)}L AS c)"
+        for code, comps in book
+    )
+    return f"array_min(array({pairs}))"
 
 
 def kmeans_assign(vq: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
     """Argmin cell per vector over literal centroids, as a row-local
     expression battery: array of (dist_q, cell) structs → array_min
     (lexicographic ⇒ deterministic tie-break on cell id)."""
-    pairs = F.array(
-        *[
-            F.struct(
-                kmeans_dist_q(F.col("xq"), comps).alias("d"),
-                F.lit(int(cell)).cast("bigint").alias("c"),
-            )
-            for cell, comps in cents
-        ]
+    return vq.select(
+        "vec_id", "xq", F.expr(f"{_argmin_code('xq', cents)}.c").alias("cell")
     )
-    return vq.select("vec_id", "xq", F.array_min(pairs)["c"].alias("cell"))
 
 
 def kmeans_recompute(assigned: DataFrame) -> list[tuple[int, list[float]]]:
@@ -850,12 +819,12 @@ def ivf_train(
     the full corpus with the trained literals — exactly the assign pass
     this loop already runs per round.
     """
-    vq = vectors.select(id_col, quantize8(F.col(vec_col)).alias("xq"))
+    vq = vectors.select(id_col, quantize8(vec_col).alias("xq"))
     seeds = (
         vq.filter(F.col(id_col).between(1, k))
         # a NaN/Inf component quantizes to a NULL xq entry — unindexable
         # as a seed (same contract as finite_vec for raw centroids)
-        .filter(~F.exists("xq", lambda x: x.isNull()))
+        .filter("NOT exists(xq, x -> x IS NULL)")
         .select(id_col, "xq")
         .collect()
     )
@@ -910,30 +879,22 @@ def pq_assign(vq: DataFrame, books: list[list[tuple[int, list[float]]]]) -> Data
     the compressed-sled IVF-PQ serves from); everything is row-local
     expression work over literal codebooks, so the pass is a narrow scan
     with no shuffle at all."""
-    code_cols = []
-    err_cols = []
-    for m, book in enumerate(books):
-        sub = F.slice(F.col("xq"), m * PQ_SUB + 1, PQ_SUB)
-        pairs = F.array(
-            *[
-                F.struct(
-                    kmeans_dist_q(sub, comps).alias("d"),
-                    F.lit(int(code)).cast("bigint").alias("c"),
-                )
-                for code, comps in book
-            ]
-        )
-        best = F.array_min(pairs)
-        code_cols.append(best["c"])
-        err_cols.append(best["d"])
-    recon = err_cols[0]
-    for e in err_cols[1:]:
-        recon = recon + e
+    best = [
+        _argmin_code(f"slice(xq, {m * PQ_SUB + 1}, {PQ_SUB})", book)
+        for m, book in enumerate(books)
+    ]
+    codes = [f"{b}.c" for b in best]
     return vq.select(
         "vec_id",
-        F.array(*code_cols).alias("codes"),
-        F.concat_ws("|", *[c.cast("string") for c in code_cols]).alias("pq_code"),
-        recon.cast("bigint").alias("recon_err_q"),
+        F.expr(f"array({', '.join(codes)})").alias("codes"),
+        F.expr(
+            "concat_ws('|', "
+            + ", ".join(f"CAST({c} AS STRING)" for c in codes)
+            + ")"
+        ).alias("pq_code"),
+        F.expr(f"CAST({' + '.join(f'{b}.d' for b in best)} AS BIGINT)").alias(
+            "recon_err_q"
+        ),
     )
 
 
@@ -945,8 +906,6 @@ def pq_adc_lut(
     the same floor(d²·1e14) terms `kmeans_dist_q` uses, evaluated in Python
     (identical IEEE doubles), so Spark, DuckDB and this table agree
     bit-for-bit. PQ_M · PQ_K integers per query."""
-    import math
-
     luts = []
     for m, book in enumerate(books):
         qsub = query_xq[m * PQ_SUB : (m + 1) * PQ_SUB]
@@ -968,15 +927,13 @@ def pq_adc_topk(
     distance is PQ_M integer LUT lookups + adds — the scan never touches the
     original vectors (32× less bandwidth), which is the entire point of the
     PQ serving path. TakeOrderedAndProject finishes it; no shuffle."""
-    adc = None
-    for m, row in enumerate(luts):
-        arr = F.array(
-            *[F.lit(int(s)).cast("bigint") for _code, s in sorted(row)]
-        )
-        t = F.element_at(arr, F.element_at(F.col("codes"), m + 1).cast("int"))
-        adc = t if adc is None else adc + t
+    adc = " + ".join(
+        f"element_at({_sql_ints([s for _code, s in sorted(row)], 'L')},"
+        f" CAST(element_at(codes, {m + 1}) AS INT))"
+        for m, row in enumerate(luts)
+    )
     return (
-        coded.select("vec_id", adc.cast("bigint").alias("adc_q"))
+        coded.select("vec_id", F.expr(f"CAST({adc} AS BIGINT)").alias("adc_q"))
         .orderBy("adc_q", "vec_id")
         .limit(k)
     )

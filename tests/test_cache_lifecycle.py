@@ -333,3 +333,39 @@ def test_scalar_cache_follows_layout_lifecycle():
     assert state.get("other", s2, "/d1", build(47)) == 47
     assert state.get("k", s2, "/d1", build(48)) is None
     assert calls == [41, 42, 43, 44, 45, None, 47]
+
+
+def test_invalidate_drops_shared_query_vector_and_centroids(spark, tmp_path):
+    """The similarity catalog's query vector and literal IVF centroids are
+    process-wide shared entries of STATE. An out-of-band rewrite of
+    ``embeddings`` keeps serving the snapshot until ``invalidate()``; after
+    it both follow the new data (every embedding doubled here)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_taxi_pyspark_spark.catalog._cache import STATE
+    from nyc_taxi_pyspark_spark.catalog.similarity import (
+        _centroids,
+        _query_vec_literal,
+    )
+    from tests.conftest import SF_DIR
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, sf, copy_function=shutil.copyfile)
+    os.chmod(sf, 0o755)
+    cents, qvec = _centroids(spark, sf), _query_vec_literal(spark, sf)
+
+    path = os.path.join(sf, "embeddings.parquet")
+    table = pq.read_table(path)
+    df = table.to_pandas()
+    df["embedding"] = df["embedding"].map(lambda v: v * 2)  # float32: exact
+    pq.write_table(pa.Table.from_pandas(df, schema=table.schema), path)
+    assert _centroids(spark, sf) == cents  # snapshot until invalidated
+    assert _query_vec_literal(spark, sf) == qvec
+
+    STATE.invalidate()
+    assert _centroids(spark, sf) == [(cid, [2 * x for x in v]) for cid, v in cents]
+    assert _query_vec_literal(spark, sf) == [2 * x for x in qvec]
+    STATE.invalidate()  # leave no entry keyed by the deleted tmp dir

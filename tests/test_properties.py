@@ -143,7 +143,7 @@ def test_int8_quantize_invariants(spark, vec):
     )
 
     df = spark.createDataFrame([(vec,)], "embedding array<double>")
-    q = list(df.select(int8_quantize(F.col("embedding")).alias("q")).head().q)
+    q = list(df.select(int8_quantize("embedding").alias("q")).head().q)
     assert q == int8_quantize_py(vec)  # Spark == Python twin, bit-identical
     assert all(-127 <= v <= 127 for v in q)
     m = max(abs(x) for x in vec)
@@ -154,6 +154,110 @@ def test_int8_quantize_invariants(spark, vec):
             if x < 0:
                 assert v <= 0
         assert 127 in [abs(v) for x, v in zip(vec, q) if abs(x) == m]
+
+
+# |x| <= 10 keeps every product term and every 64-term int64 sum in range,
+# where the Python twins (plain floor + unbounded int sum) are defined.
+_COMPONENT = st.floats(-10, 10, allow_nan=False, width=64)
+_VEC64 = st.lists(_COMPONENT, min_size=64, max_size=64)
+
+
+def _bits(x: float) -> str:
+    return float(x).hex()  # tells -0.0 from 0.0
+
+
+@given(pairs=st.lists(st.tuples(_VEC64, _VEC64), min_size=1, max_size=4))
+@settings(**_SETTINGS)
+def test_similarity_kernels_match_python_twins(spark, pairs):
+    """The SQL-text kernels equal their Python twins bit for bit on random
+    finite vectors: dot/l2_norm vs dsum_py/l2_norm_py, lsh_bucket vs
+    lsh_bucket_py, sq_dist vs sq_dist_py and ivf_assign vs ivf_cell_py.
+    sq_dist and ivf_assign inline their centroids as SQL literals, so this
+    also round-trips every generated double through its literal text."""
+    from nyc_taxi_pyspark_spark.operators.similarity import (
+        dot,
+        dsum_py,
+        ivf_assign,
+        ivf_cell_py,
+        l2_norm,
+        l2_norm_py,
+        lsh_bucket,
+        lsh_bucket_py,
+        sq_dist,
+        sq_dist_py,
+    )
+
+    cents = [(cid, b) for cid, (_a, b) in enumerate(pairs, start=1)]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "i int, a array<double>, b array<double>",
+    )
+    rows = (
+        df.select(
+            "i",
+            dot("a", "b").alias("dot"),
+            l2_norm("a").alias("nrm"),
+            lsh_bucket("a").alias("bucket"),
+            sq_dist("a", cents[0][1]).alias("sq"),
+            ivf_assign("a", cents).alias("cell"),
+        )
+        .orderBy("i")
+        .collect()
+    )
+    for (a, b), r in zip(pairs, rows):
+        assert _bits(r.dot) == _bits(dsum_py([x * y for x, y in zip(a, b)]))
+        assert _bits(r.nrm) == _bits(l2_norm_py(a))
+        assert r.bucket == lsh_bucket_py(a)
+        assert _bits(r.sq) == _bits(sq_dist_py(a, cents[0][1]))
+        assert r.cell == ivf_cell_py(a, cents)
+
+
+@given(
+    vec=st.lists(_COMPONENT, min_size=8, max_size=8),
+    pos=st.integers(0, 7),
+    bad=st.sampled_from(
+        [float("nan"), float("inf"), float("-inf"), 1e6, -1e6, 1.7976931348623157e308]
+    ),
+)
+@settings(**_SETTINGS)
+def test_nonfinite_component_contributes_zero(spark, vec, pos, bad):
+    """A NaN, ±Inf or |x|·1e14 > 2^63 component adds 0 to the folds
+    (dot, l2_norm, sq_dist) instead of aborting the job under ANSI: the
+    result equals the Python twin over the other components."""
+    from nyc_taxi_pyspark_spark.operators.similarity import (
+        dot,
+        dsum_py,
+        l2_norm,
+        l2_norm_py,
+        sq_dist,
+        sq_dist_py,
+    )
+
+    dirty = vec[:pos] + [bad] + vec[pos + 1 :]
+    clean = vec[:pos] + vec[pos + 1 :]
+    df = spark.createDataFrame([(dirty, [1.0] * 8)], "a array<double>, b array<double>")
+    r = df.select(
+        dot("a", "b").alias("dot"),
+        l2_norm("a").alias("nrm"),
+        sq_dist("a", [0.0] * 8).alias("sq"),
+    ).head()
+    assert _bits(r.dot) == _bits(dsum_py(clean))
+    assert _bits(r.nrm) == _bits(l2_norm_py(clean))
+    assert _bits(r.sq) == _bits(sq_dist_py(clean, [0.0] * 7))
+
+
+def test_sql_double_literals_round_trip(spark):
+    """sql_double text parses back to the same IEEE value, specials included."""
+    import math
+
+    from nyc_taxi_pyspark_spark.operators.similarity import sql_doubles
+
+    vals = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e-05, 0.1,
+            -1.7976931348623157e308, 1.7976931348623157e308, 9.223372036854775e18,
+            float("inf"), float("-inf"), float("nan")]
+    got = spark.range(1).select(F.expr(sql_doubles(vals)).alias("v")).head().v
+    for want, x in zip(vals, got):
+        assert (math.isnan(x) and math.isnan(want)) or _bits(x) == _bits(want)
 
 
 @given(

@@ -100,11 +100,11 @@ def test_cosine_matches_numpy(spark):
     df = spark.createDataFrame(
         [(a.tolist(), b.tolist())], "va array<float>, vb array<float>"
     )
-    got = df.select(cosine(F.col("va"), F.col("vb")).alias("c")).first().c
+    got = df.select(cosine("va", "vb").alias("c")).first().c
     ad, bd = a.astype("float64"), b.astype("float64")
     want = float(ad @ bd / (np.linalg.norm(ad) * np.linalg.norm(bd)))
     assert math.isclose(got, want, rel_tol=1e-9)
-    nrm = df.select(l2_norm(F.col("va")).alias("n")).first().n
+    nrm = df.select(l2_norm("va").alias("n")).first().n
     assert math.isclose(nrm, float(np.linalg.norm(ad)), rel_tol=1e-9)
 
 
@@ -114,7 +114,7 @@ def test_lsh_bucket_matches_python_reference(spark):
     rng = np.random.default_rng(11)
     v = rng.normal(size=64).astype("float32")
     df = spark.createDataFrame([(v.tolist(),)], "embedding array<float>")
-    got = df.select(lsh_bucket(F.col("embedding")).alias("b")).first().b
+    got = df.select(lsh_bucket("embedding").alias("b")).first().b
     planes = hyperplane_signs()
     want = "".join(
         "1" if sum(float(x) * s for x, s in zip(v, p)) > 0 else "0"
@@ -222,7 +222,7 @@ def test_int8_cosine_tracks_exact(spark):
     out = (
         df.select(
             "vec_id",
-            int8_cosine(int8_quantize(F.col("embedding")), qq).alias("c8"),
+            int8_cosine(int8_quantize.sql("embedding"), qq).alias("c8"),
         )
         .orderBy(F.desc("c8"))
         .collect()
@@ -243,7 +243,7 @@ def test_int8_quantize_zero_vector_is_zero(spark):
     from nyc_taxi_pyspark_spark.operators.similarity import int8_quantize
 
     df = spark.createDataFrame([(1, [0.0] * 4)], "vec_id long, embedding array<double>")
-    row = df.select(int8_quantize(F.col("embedding")).alias("q")).head()
+    row = df.select(int8_quantize("embedding").alias("q")).head()
     assert list(row.q) == [0, 0, 0, 0]
 
 
