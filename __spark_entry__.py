@@ -24,177 +24,6 @@ from nyc_taxi_pyspark_spark.catalog import ORACLES, QUERIES  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 
-# The driver records correctness rows for ~50 queries/round. Order the
-# catalog so a bounded run always covers the weakest evidence first:
-#   1. queries whose LATEST recorded check failed (hash/row mismatch against
-#      an existing oracle, or a harness error other than the by-design
-#      "no_oracle") — a red row must be re-adjudicated before stale greens,
-#   2. events-reading queries whose latest green predates the driver's
-#      events.parquet regeneration (observed between r04 and r05,
-#      BASELINE.md §6) — their evidence is on superseded data, so it ranks
-#      as invalidated, not merely stale,
-#   3. queries with no driver row in ANY recorded round (registration order),
-#   4. checked queries, stalest round first (round-1-only before round-2, ...),
-#      registration order within a round.
-# The records are read from the CORRECTNESS_r*.json artifacts committed at
-# the repo root, so this ordering auto-adapts as rounds accumulate. All
-# registered queries are emitted either way; only the dict order changes.
-
-# Correctness files at or after this name were recorded on the regenerated
-# (TIMESTAMP-MICROS) events.parquet; events-dependent greens from older
-# files are treated as invalidated evidence.
-_EVENTS_DATA_EPOCH = "CORRECTNESS_r05.json"
-
-# Queries whose implementation was RESTRUCTURED in an optimization round,
-# mapped to the first correctness artifact recorded after that change
-# (the driver re-checks after each round, so CORRECTNESS_r15 is post-r15
-# code). A green row OLDER than the restructure epoch is builder-parity
-# evidence only, not driver ground truth — rank it right after outright
-# failures so the rotation re-adjudicates restructured paths first
-# (VERDICT r15 item 3: 19 of 20 r15-touched queries missed the sample).
-_RESTRUCTURED_EPOCH = {
-    # round 15 (first optimization round)
-    "embed_power_iteration_pc1": "CORRECTNESS_r15.json",
-    "udf_group_center": "CORRECTNESS_r15.json",
-    "udf_arrow_center": "CORRECTNESS_r15.json",
-    "search_hybrid_rrf": "CORRECTNESS_r15.json",
-    "text_bm25_topk": "CORRECTNESS_r15.json",
-    "text_heavy_hitters": "CORRECTNESS_r15.json",
-    "taxi_kpi_by_payment": "CORRECTNESS_r15.json",
-    "taxi_kpi_heatmap": "CORRECTNESS_r15.json",
-    "embed_semantic_dedup": "CORRECTNESS_r15.json",
-    "text_dedup_rate_by_source": "CORRECTNESS_r15.json",
-    "text_dup_clusters": "CORRECTNESS_r15.json",
-    "text_dedup_survivor_weights": "CORRECTNESS_r15.json",
-    "graph_link_prediction": "CORRECTNESS_r15.json",
-    "corpus_source_overlap": "CORRECTNESS_r15.json",
-    "corpus_bloom_prefilter": "CORRECTNESS_r15.json",
-    "text_keyphrases_rake": "CORRECTNESS_r15.json",
-    "multimodal_features": "CORRECTNESS_r15.json",
-    "multimodal_frames": "CORRECTNESS_r15.json",
-    "multimodal_resize": "CORRECTNESS_r15.json",
-    "source_syndication_rank": "CORRECTNESS_r15.json",
-    # round 16 (second optimization round) — maintained as queries are
-    # touched this round; r16 greens exist only from CORRECTNESS_r16 on.
-    # (kcore/syndication are NOT listed: their r16 restructure attempts
-    # measured slower and were not kept — shipped code is r15's.)
-    "text_novelty_curve": "CORRECTNESS_r16.json",
-    "tpch_q2_min_cost_supplier": "CORRECTNESS_r16.json",
-    "tpch_q11_important_stock": "CORRECTNESS_r16.json",
-    "tpch_q16_supplier_part_counts": "CORRECTNESS_r16.json",
-    "tpch_q20_promotion_suppliers": "CORRECTNESS_r16.json",
-    "graph_brand_modularity": "CORRECTNESS_r16.json",
-    "events_distribution_drift": "CORRECTNESS_r16.json",
-    "events_value_winsorized": "CORRECTNESS_r16.json",
-    "stats_ttest": "CORRECTNESS_r16.json",
-    "null_fill_group_mean": "CORRECTNESS_r16.json",
-    "group_quantiles": "CORRECTNESS_r16.json",
-    "group_quantiles_approx": "CORRECTNESS_r16.json",
-    "skew_salted_agg": "CORRECTNESS_r16.json",
-    "events_qq_compare": "CORRECTNESS_r16.json",
-    "sketch_hll_union_distinct": "CORRECTNESS_r16.json",
-    "embed_dim_stats": "CORRECTNESS_r16.json",
-    "embed_outlier_docs": "CORRECTNESS_r16.json",
-    "embed_binary_hamming_topk": "CORRECTNESS_r16.json",
-    "multimodal_dedup": "CORRECTNESS_r16.json",
-    "join_asof": "CORRECTNESS_r16.json",
-    "join_asof_forward": "CORRECTNESS_r16.json",
-    "embed_pq_codes": "CORRECTNESS_r16.json",
-    "embed_pq_search": "CORRECTNESS_r16.json",
-    "embed_ivfpq_search": "CORRECTNESS_r16.json",
-    "text_tficf_topk": "CORRECTNESS_r16.json",
-    "corpus_incremental_dedup": "CORRECTNESS_r16.json",
-    "text_unigram_rarity": "CORRECTNESS_r16.json",
-    "text_doc_surprisal": "CORRECTNESS_r16.json",
-    "text_bigram_topk": "CORRECTNESS_r16.json",
-}
-
-
-_EVENTS_LOAD_RE = __import__("re").compile(
-    # an actual events-table load, not an incidental mention (comments,
-    # identifiers like n_events): load_table(..., "events"), the shared
-    # _events()/ _ev() helpers, or a direct events.parquet path
-    r"""load_table\([^)]*['"]events['"]\s*\)"""
-    r"""|\b_events\s*\(|['"]events\.parquet['"]"""
-)
-_EVENTS_SQL_RE = __import__("re").compile(
-    # events as a relation in the oracle SQL: FROM/JOIN events or a
-    # comma-list member — never a column/alias substring like n_events
-    r"\b(?:from|join)\s+events\b|,\s*events\s+(?:as\s+)?[a-z_]|,\s*events\s*$",
-    __import__("re").IGNORECASE | __import__("re").MULTILINE,
-)
-
-
-def _reads_events(name: str) -> bool:
-    import inspect
-
-    src = ""
-    try:
-        src = inspect.getsource(QUERIES[name])
-    except Exception:
-        pass
-    return bool(_EVENTS_LOAD_RE.search(src)) or bool(
-        _EVENTS_SQL_RE.search(ORACLES.get(name) or "")
-    )
-
-
-def _checked_rounds() -> list[tuple[str, dict]]:
-    import glob
-    import json
-
-    rounds = []
-    for path in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                rounds.append((os.path.basename(path), json.load(fh)))
-        except Exception:
-            continue
-    return rounds
-
-
-def _is_fail(rec: dict) -> bool:
-    err = rec.get("err")
-    if err is not None and err != "no_oracle":
-        return True  # harness crash (e.g. unhashable result column)
-    if rec.get("oracle_rows") is not None:
-        return not (
-            rec.get("rows_match") and rec.get("schema_match") and rec.get("hash_match")
-        )
-    return False  # rows-only-by-design checks never count as failures
-
-
-def _ordered(mapping: dict) -> dict:
-    rounds = _checked_rounds()
-    last_round = {}  # query -> latest round index in which it was checked
-    last_file = {}  # query -> filename of that round's artifact
-    last_fail = {}  # query -> did its latest check fail
-    for i, (fname, recs) in enumerate(rounds):
-        for n, rec in recs.items():
-            last_round[n] = i
-            last_file[n] = fname
-            last_fail[n] = _is_fail(rec) if isinstance(rec, dict) else False
-    names = list(QUERIES)
-
-    def tier(n: str) -> int:
-        if last_fail.get(n, False):
-            return 0
-        epoch = _RESTRUCTURED_EPOCH.get(n)
-        if epoch is not None and last_file.get(n, "") < epoch:
-            return 1  # restructured since its last driver check
-        if (
-            n in last_file
-            and last_file[n] < _EVENTS_DATA_EPOCH
-            and _reads_events(n)
-        ):
-            return 2  # green, but on pre-regeneration events data
-        return 3
-
-    order = sorted(
-        range(len(names)),
-        key=lambda i: (tier(names[i]), last_round.get(names[i], -1), i),
-    )
-    return {names[i]: mapping[names[i]] for i in order if names[i] in mapping}
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -203,9 +32,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return _ordered(QUERIES)
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB ANSI-SQL twin per query (omitted ⇒ rows-only check)."""
-    return _ordered(ORACLES)
+    return dict(ORACLES)

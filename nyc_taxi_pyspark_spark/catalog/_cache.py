@@ -68,6 +68,8 @@ from collections.abc import Callable
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
+from nyc_taxi_pyspark_spark.sources.io import _TS_UNIT_CACHE
+
 
 class _Entry:
     __slots__ = ("lock", "session", "key", "value")
@@ -128,12 +130,14 @@ class SessionState:
     def invalidate(self) -> None:
         """Drop every entry so the next ``get`` rebuilds from the current
         table state — the escape hatch of the snapshot contract (module
-        docstring) for in-place table mutation."""
+        docstring) for in-place table mutation. The footer-sniffed timestamp
+        units of ``sources.io`` are forgotten too: a rewrite may flip them."""
         with self._lock:
             entries = list(self._entries.values())
         for entry in entries:  # one lock at a time: builds nest name locks
             with entry.lock:
                 entry.drop()
+        _TS_UNIT_CACHE.clear()
 
 
 STATE = SessionState()

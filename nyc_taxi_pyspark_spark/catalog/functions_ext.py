@@ -55,8 +55,8 @@ def string_functions(spark, sf_dir):
 def array_functions(spark, sf_dir):
     """Array surface: split/array_distinct/sort_array/slice/contains/join/
     element_at. Every output column is a SCALAR: complex-typed results
-    crash the driver's value hasher (CORRECTNESS_r03: unhashable 'list'),
-    so arrays are flattened with array_join before leaving the query."""
+    crash the driver's value hasher (unhashable 'list'), so arrays are
+    flattened with array_join before leaving the query."""
     d = load_table(spark, sf_dir, "documents")
     sw = F.split("text", " ")
     words = F.array_sort(F.array_distinct(sw))

@@ -147,8 +147,7 @@ def join_three_way(spark, sf_dir):
     relation crept the warm median 0.68 s → ~1.09 s across rounds 1→9
     (the worst baseline ratio in the catalog). Interleaved A/B at sf0.1:
     hinted SMJ 0.63 s vs static broadcast 0.87 s median — the hint
-    restores BOTH the baseline number and the scale-honest plan. See
-    BASELINE.md §'join_three_way adjudication'."""
+    restores BOTH the baseline number and the scale-honest plan."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")

@@ -15,7 +15,7 @@ explicit per-query diffs instead of waiting for an advisor grep.
 Expected-and-documented non-passes are triaged in _EXPECTED below; the
 audit exits non-zero only on an UNEXPECTED divergence. Usage:
 
-    PYTHONPATH=/root/repo python scripts/dirty_parity_audit.py [query ...]
+    python scripts/dirty_parity_audit.py [query ...]
 """
 
 from __future__ import annotations

@@ -39,7 +39,7 @@ different numbers on an older cluster.
 Queries whose CONTRACT is layout-dependent are triaged in _EXPECTED;
 the audit exits non-zero only on an UNEXPECTED divergence. Usage:
 
-    PYTHONPATH=/root/repo python scripts/layout_invariance_audit.py \
+    python scripts/layout_invariance_audit.py \
         [--reshard | --ansi] [sf_dir] [query ...]
 """
 

@@ -36,7 +36,7 @@ audited. Streaming catalog entries DO start their (tiny, sf0.001)
 streams on invocation; their final batch-side plan is what gets
 audited. Usage:
 
-    PYTHONPATH=/root/repo python scripts/plan_audit.py [sf_dir] [query ...]
+    python scripts/plan_audit.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations

@@ -13,9 +13,9 @@ all overhead; ≈ 10 means the engine-side work already dominates and the
 per-row cost is what a cluster would amortize.
 
 Protocol: one fresh process per scale factor (no cross-SF JVM state), each
-query 1 cold + median of 3 warm runs through the noop sink — same
-materialization as bench.py. Representative subset spanning every operator
-family rather than all 78 headliners (the curve, not the gate).
+query 1 cold + median of 3 warm runs through the noop sink (full
+materialization, no collect cost). Representative subset spanning every
+operator family rather than all 78 headliners (the curve, not the gate).
 
 The second axis is a strong-scaling (core-count) sweep over a ×32
 key-shifted amplification of the facts (the driver SFs are too small to
@@ -40,7 +40,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -281,9 +282,8 @@ def child(sf_dir: str, names: list[str], n_runs: int = 3) -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
-        # environmental noise only ever ADDS wall-clock (same argument as
-        # bench.py's isolated-rerun protocol), so the sweep takes the min;
-        # the SF curve keeps the median (comparability with bench.py)
+        # environmental noise only ever ADDS wall-clock, so the sweep
+        # takes the min; the SF curve keeps the median
         stat = min if os.environ.get("SCALING_STAT") == "min" else statistics.median
         out[name] = round(stat(runs), 3)
         print(f"  {sf_dir.rsplit('/',1)[-1]} {name}: {out[name]}s", file=sys.stderr)
@@ -378,7 +378,7 @@ def sf1_rehearsal() -> None:
         "```",
     ]
     marker = "\n## sf1 dress rehearsal"
-    text = open("/root/repo/SCALING.md").read()
+    text = open(os.path.join(ROOT, "SCALING.md")).read()
     tail = ""
     if marker in text:
         # splice: replace ONLY this section, preserving anything appended
@@ -389,7 +389,7 @@ def sf1_rehearsal() -> None:
         if nxt != -1:
             tail = "\n" + text[nxt:].lstrip("\n")
         text = text[:start].rstrip() + "\n"
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write(text.rstrip() + "\n" + "\n".join(lines) + "\n" + tail)
     print("spliced sf1 section into SCALING.md")
 
@@ -548,7 +548,7 @@ def main() -> None:
     # must refresh its own numbers without erasing the others' evidence
     tail = ""
     try:
-        old = open("/root/repo/SCALING.md").read()
+        old = open(os.path.join(ROOT, "SCALING.md")).read()
         idx = old.find("\n## sf1 dress rehearsal")
         if idx == -1:
             idx = old.find("\n## Robustness gates")
@@ -556,7 +556,7 @@ def main() -> None:
             tail = "\n" + old[idx:].lstrip("\n")
     except OSError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n" + tail)
     print("wrote SCALING.md")
 

@@ -44,38 +44,3 @@ def test_cli_preview_and_repl():
         stdin="SELECT COUNT(*) AS n FROM nation;\n\n",
     )
     assert "n" in stdout
-
-
-def test_rotation_prioritizes_restructured_queries():
-    """VERDICT r15 item 3: a query restructured in an optimization round
-    ranks as weakest evidence (right after outright failures) until the
-    driver's oracle has re-checked it AT or AFTER the restructure epoch;
-    a post-epoch green demotes it back to normal staleness ordering.
-    Epoch-aware: once CORRECTNESS_r16+ covers a name, it may legally move
-    back into the body of the rotation."""
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    pos = {n: i for i, n in enumerate(names)}
-    last_file = {}
-    for fname, recs in entry._checked_rounds():
-        for n in recs:
-            last_file[n] = fname
-    pending = [
-        n
-        for n, epoch in entry._RESTRUCTURED_EPOCH.items()
-        if last_file.get(n, "") < epoch
-    ]
-    demoted = [
-        n
-        for n, epoch in entry._RESTRUCTURED_EPOCH.items()
-        if last_file.get(n, "") >= epoch
-    ]
-    # every pending (restructured, not yet driver-checked) name precedes
-    # every demoted (checked post-epoch) restructured name
-    if pending and demoted:
-        assert max(pos[n] for n in pending) < min(pos[n] for n in demoted)
-    # the pending tier sits at the very front of the rotation (no stale
-    # green may outrank a restructured-unchecked query)
-    if pending:
-        assert max(pos[n] for n in pending) < len(pending) + 5

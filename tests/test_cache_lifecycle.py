@@ -263,6 +263,25 @@ def test_invalidate_is_safe_when_empty():
     SessionState().invalidate()  # no entry, no error
 
 
+def test_invalidate_forgets_sniffed_timestamp_unit(tmp_path):
+    """An out-of-band rewrite may flip events.ts between TIMESTAMP(NANOS)
+    and TIMESTAMP(MICROS) (the testdata has shipped both); after
+    invalidate() the footer is sniffed again, or ts decodes 1000x off."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_taxi_pyspark_spark.sources.io import _parquet_ts_is_nanos
+
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([1_700_000_000_000_000_000], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path, version="2.6")
+    assert _parquet_ts_is_nanos(path)
+
+    pq.write_table(pa.table({"ts": ts.cast(pa.timestamp("us"))}), path)
+    SessionState().invalidate()
+    assert not _parquet_ts_is_nanos(path)
+
+
 def test_invalidate_drops_layouts_and_scalars_together(spark, tmp_path):
     """One invalidate() is the whole external-writer escape hatch: it
     unpersists every layout and forgets every scalar."""

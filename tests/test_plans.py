@@ -49,9 +49,9 @@ def test_dim_joins_broadcast(spark):
 def test_three_way_fact_join_stays_sort_merge(spark):
     """The lineitem⋈orders fact join must stay the hinted SMJ — the only
     plan that exists at 100 TB. Catalyst drifted this to a static orders
-    broadcast once (round-10 adjudication, BASELINE.md §11: +60% warm
-    cost from the driver-built hashed relation); this gate keeps the
-    regression from silently returning. The dim side stays broadcast."""
+    broadcast once (+60% warm cost from the driver-built hashed
+    relation); this gate keeps the regression from silently returning.
+    The dim side stays broadcast."""
     df = QUERIES["join_three_way"](spark, SF)
     plan = formatted_plan(df)
     assert "SortMergeJoin" in plan  # fact⋈fact pinned

@@ -394,8 +394,8 @@ def test_cached_stream_reuses_running_query(spark):
 
 def test_stop_all_streams_drains_registry(spark):
     """stop_all_streams must stop and untrack every persistent stream the
-    session owns — the pre-exit drain bench.py runs so no memory-sink
-    stream races JVM teardown (the BENCH_r11 tail stack trace)."""
+    session owns — the pre-exit drain, so no memory-sink stream races
+    JVM teardown (a stack trace at process exit otherwise)."""
     from nyc_taxi_pyspark_spark.catalog.streaming import (
         stream_stateful_totals,
     )

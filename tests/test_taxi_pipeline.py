@@ -131,68 +131,14 @@ def test_kpis_shapes(spark, trips):
 
 
 def test_bench_headline_set_is_consistent():
-    """Every benchmarked name must be a registered catalog query with an
-    expectation entry, and both baseline docs must mention it — guards
-    against typos when headlining a new operator."""
-    import bench
-
+    """Every query PLANS.md snapshots must be a registered catalog query,
+    listed once — guards against typos and leftovers of a removed query."""
     from nyc_taxi_pyspark_spark.catalog import QUERIES
+    from scripts.dump_plans import SNAPSHOT
 
-    missing = [n for n in bench.HEADLINE if n not in QUERIES]
-    assert not missing, f"headline names not in catalog: {missing}"
-    no_expected = [n for n in bench.HEADLINE if n not in bench.EXPECTED]
-    assert not no_expected, f"headline names without EXPECTED: {no_expected}"
-    stale = [n for n in bench.EXPECTED if n not in bench.HEADLINE]
-    assert not stale, f"EXPECTED entries not headlined: {stale}"
-    baseline = open("BASELINE.md").read()
-    undocumented = [n for n in bench.HEADLINE if n not in baseline]
-    assert not undocumented, f"headline names not in BASELINE.md: {undocumented}"
-
-
-def test_bench_slim_line_flags_cannot_starve_queries():
-    """VERDICT r15 item 2: a noisy run (13 flags over 109 queries) must
-    still emit a per-query record big enough for the driver's scaling
-    comparison (>= 40 entries), stay inside the stdout budget, and carry
-    the flags in compressed raw/normalized form with an omitted count."""
-    import json
-
-    import bench
-
-    timings = {f"query_{i:03d}": round(0.1 + i * 0.017, 3) for i in range(109)}
-    flagged_names = sorted(timings)[:13]
-    flagged = {
-        n: (
-            f"> 1.5x previous round 0.4s (raw 1.62x, "
-            f"drift-normalized 1.44x at calibration 1.12x)"
-        )
-        for n in flagged_names
-    }
-    out = {
-        "metric": "headline_query_wall_clock_total",
-        "value": round(sum(timings.values()), 3),
-        "sf": 0.1,
-        "calibration_s": {
-            "start": 1.1,
-            "end": 1.2,
-            "expected": 1.05,
-            "drift": 1.1,
-        },
-    }
-    line = bench.build_slim_line(out, timings, flagged, drift_py=1.05)
-    assert len(line) <= 1700
-    slim = json.loads(line)
-    assert len(slim["queries"]) >= 40, len(slim["queries"])
-    # most-expensive-first fill: the top query is always present
-    assert max(timings, key=timings.get) in slim["queries"]
-    assert slim["queries_omitted"] == 109 - len(slim["queries"])
-    # flags present in compressed ratio form, omissions counted honestly
-    assert slim["flags"]
-    assert all("/" in v for v in slim["flags"].values())
-    assert slim["flags_omitted"] == 13 - len(slim["flags"])
-    assert slim["calibration_s"]["drift_py"] == 1.05
-    # and a calm run keeps the old shape (no flags key at all)
-    calm = json.loads(bench.build_slim_line(out, timings, {}, drift_py=1.0))
-    assert "flags" not in calm and len(calm["queries"]) >= 40
+    missing = [n for n in SNAPSHOT if n not in QUERIES]
+    assert not missing, f"snapshot names not in catalog: {missing}"
+    assert len(SNAPSHOT) == len(set(SNAPSHOT))
 
 
 def test_add_running_index_matches_row_number(spark):
