@@ -135,6 +135,11 @@ class JsonlStreamReader(SimpleDataSourceStreamReader):
     recovery, so a checkpointed query resumes without loss or
     double-reads.
 
+    As with Spark's own file-stream sources, a file must appear in the
+    directory whole: write it under a name the ``*.jsonl`` glob skips (a
+    dot-prefixed one, say) and rename it in. A file listed while still
+    being written counts as consumed, so its unwritten tail is never read.
+
     The *simple* stream API runs reads driver-side (Spark prefetches and
     ships record batches to executors) — right for control-plane-size
     feeds (an API poll, a manifest tail). A data-plane volume source

@@ -8,30 +8,59 @@ import os
 import subprocess
 import sys
 
+from tests.conftest import SF_DIR
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(*argv: str, stdin: str | None = None) -> str:
+    return _python("-m", "nyc_taxi_pyspark_spark.serve.app", *argv, stdin=stdin)
+
+
+def _python(*args: str, stdin: str | None = None, env: dict[str, str] | None = None) -> str:
     out = subprocess.run(
-        [sys.executable, "-m", "nyc_taxi_pyspark_spark.serve.app", *argv],
+        [sys.executable, *args],
         capture_output=True,
         text=True,
         input=stdin,
         timeout=300,
         cwd=REPO,
-        env={**os.environ, "PYTHONPATH": REPO},
+        env={**os.environ, "PYTHONPATH": REPO, **(env or {})},
     )
     assert out.returncode == 0, out.stderr[-2000:]
     return out.stdout
 
 
-def test_cli_sql_end_to_end():
-    stdout = _run(
-        "--sf-dir", "/root/testdata/sf0.001",
-        "sql", "SELECT o_orderstatus, COUNT(*) AS n FROM orders GROUP BY 1 ORDER BY 1",
-    )
-    assert "o_orderstatus" in stdout and "n" in stdout
-    assert len(stdout.strip().splitlines()) >= 2
+# The CLI with the session's class-data-sharing archive dir moved to argv[1]
+# (the rest of argv is the CLI's), so a test controls whether it exists.
+_CLI_WITH_ARCHIVE_DIR = (
+    "import sys; from nyc_taxi_pyspark_spark import session; session._CDS_DIR = sys.argv.pop(1); "
+    "from nyc_taxi_pyspark_spark.serve.app import main; sys.exit(main())"
+)
+
+
+def test_cli_sql_end_to_end(tmp_path):
+    """Stdout holds the result table and nothing else (unified JVM logging
+    lines start with "["), both on the launch that builds the driver's
+    class-data archive and on the one that maps it."""
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    tables = []
+    for _ in ("build", "use"):
+        stdout = _python(
+            "-c", _CLI_WITH_ARCHIVE_DIR, str(tmp_path / "cds"),
+            "--sf-dir", SF_DIR,
+            "sql", "SELECT o_orderstatus, COUNT(*) AS n FROM orders GROUP BY 1 ORDER BY 1",
+            env={"SPARK_CONF_DIR": str(conf_dir)},
+        )
+        lines = stdout.strip().splitlines()
+        assert lines[0].split() == ["o_orderstatus", "n"], stdout
+        assert len(lines) >= 2
+        assert all(len(ln.split()) == 2 and ln.split()[1].isdigit() for ln in lines[1:]), stdout
+        assert not [ln for ln in lines if ln.startswith("[")], stdout
+        tables.append(lines)
+    assert list((tmp_path / "cds").glob("driver-*.jsa")), "the first run built no archive"
+    assert tables[0] == tables[1]
 
 
 def test_cli_preview_and_repl():

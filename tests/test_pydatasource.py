@@ -115,9 +115,15 @@ def test_streaming_source_incremental_exactly_once(spark, tmp_path):
         src.mkdir()
 
         def emit(name, lo, hi):
-            with open(src / name, "w") as fh:
+            # Files enter the source dir whole (JsonlStreamReader's
+            # contract): the running stream lists the dir on every trigger,
+            # and a listing that caught b.jsonl created but not yet written
+            # consumed it with 0 rows (10 of 25 under full-suite load).
+            part = src / f".{name}.part"
+            with open(part, "w") as fh:
                 for i in range(lo, hi):
                     fh.write(json.dumps({"n_nationkey": i, "n_name": f"N{i}", "n_regionkey": i % 5}) + "\n")
+            os.replace(part, src / name)
 
         emit("a.jsonl", 0, 10)
         name = f"pysrc_stream_{round_no}_{int(time.time()*1000)}"
