@@ -2,7 +2,7 @@
 
 Catalog queries that reuse a derived layout (bucketed embeddings, MinHash /
 SimHash signature scans, candidate pair sets) persist it once per
-(SparkSession, table dir) — locally a ``persist()``, at 100 TB a layout
+(application, table dir) — locally a ``persist()``, at 100 TB a layout
 written next to the table at ingest. Scalars derived from those layouts
 (a row count, a split point, a codebook) live beside them under the same
 key. Every entry is reached through the one module-level :data:`STATE`::
@@ -15,31 +15,49 @@ entry, keyed by sf_dir alone so a fresh session skips the point lookup::
 
     STATE.get_shared("similarity.centroids", sf_dir, build)
 
-Key. An entry is keyed by (SparkSession identity, applicationId, sf_dir).
-The SESSION must be part of the key, not just the applicationId: a
-DataFrame is bound to the session that built it, and sibling sessions from
-``newSession()`` share one applicationId while holding separate SQL confs
-and separate temp-view catalogs. Handing session A's cached frame to
-session B silently runs B's query under A's shuffle-partition/AQE layout,
-and ``createOrReplaceTempView`` on it registers the view in A's catalog
-where B's ``spark.sql`` can never see it (the layout-invariance audit
-caught exactly that in ``sql_dup_clusters_recursive``). Alternating
-sibling sessions therefore rebuild rather than share.
+Key. An entry is keyed by (applicationId, sf_dir); a call under another
+key displaces it. Sibling sessions from ``newSession()`` share the
+applicationId and Spark's CacheManager, which matches cached plans by
+result, not by session, so siblings share ONE persisted layout. They do
+not share a handle: a DataFrame is bound to the session that built it,
+and siblings hold separate SQL confs and temp-view catalogs. Session A's
+frame in session B would run B's query under A's conf, and
+``createOrReplaceTempView`` on it would register the view in A's catalog,
+where B's ``spark.sql`` never sees it (the layout-invariance audit caught
+exactly that in ``sql_dup_clusters_recursive``). So:
 
-Bounded storage. Each name holds ONE live entry; a call under a different
-key displaces it. A value is persisted if and only if it is a DataFrame,
-and a displaced DataFrame is unpersisted, so a stale applicationId (or a
-switch to another table dir) can never pin dead blocks in a long-lived
-multi-session process.
+- The first session's persisted frame is the entry's ANCHOR, the only
+  owner of the CacheManager entry.
+- Any other session runs ``build()`` itself. If the CacheManager serves
+  that plan (``storageLevel`` is not NONE: one lookup, no job), the
+  unpersisted frame is the session's own handle: bound to it, seeing its
+  temp views, reading the anchor's blocks.
+- If it does not (the plan analyzes differently under that session's conf,
+  or holds a fresh ``localCheckpoint``), the new frame displaces the
+  anchor: the anchor is unpersisted and the new frame persisted. The plans
+  differ, so unpersisting after the build cannot drop the new frame's
+  cache entry, and one build suffices.
+- The last (session, handle) pair is kept beside the anchor, so a
+  session's repeated calls return its handle without planning again.
 
-Unpersist BEFORE build. Sibling sessions share Spark's CacheManager, which
-matches cached plans by result, not by session. When sibling B builds the
-same plan that A's displaced entry holds, B's ``persist()`` is a no-op
-(the plan is already cached), so unpersisting A's frame AFTER it would
-drop the only cache entry and leave B's "cached" layout recomputed on
-every use — while ``is_cached`` and ``storageLevel`` still read true.
-The displaced frame is therefore unpersisted first, and only then is the
-new one built and persisted.
+The anchor's plan is never rebound into another session, which would
+carry A's analysis-time conf (ANSI eval modes baked into casts and
+arithmetic) into B: the CacheManager decides what is shared. A scalar is
+not shared: a call from another session rebuilds it and displaces it.
+
+Bounded storage. Each name holds ONE live entry, and only its anchor is
+persisted; a sibling's handle is never persisted, so it has nothing to
+unpersist. The anchor leaves when the key changes, when a sibling's plan
+displaces it, or on :meth:`SessionState.invalidate`, so a stale
+applicationId (or a switch to another table dir) can never pin dead
+blocks in a long-lived multi-session process.
+
+Unpersist BEFORE build on a key change. Two keys can name one plan (a dir
+with and without a trailing slash). Were the old anchor unpersisted after
+the new build, the new ``persist()`` would have been a no-op on the
+matching cached plan, and the unpersist would drop the only cache entry:
+the new layout would be recomputed on every use while ``is_cached`` and
+``storageLevel`` still read true.
 
 Locking. One lock per name: the serving layer runs catalog queries from
 concurrent request threads, and two simultaneous misses on one name would
@@ -66,35 +84,39 @@ import threading
 from collections.abc import Callable
 
 from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from nyc_taxi_pyspark_spark.sources.io import _TS_UNIT_CACHE
 
 
 class _Entry:
-    __slots__ = ("lock", "session", "key", "value")
+    __slots__ = ("lock", "key", "anchor", "session", "handle")
 
     def __init__(self) -> None:
         self.lock = threading.Lock()
-        self.session: SparkSession | None = None
-        self.key: tuple | None = None
         # key is None when empty: a cached None value (kcore's empty-graph
         # k) is still a hit
-        self.value = None
+        self.key: tuple | None = None
+        self.anchor = None  # the value built first; a frame owns the cache entry
+        self.session: SparkSession | None = None  # the last caller...
+        self.handle = None  # ...and the value it got back
 
     def drop(self) -> None:
-        """Forget the value, unpersisting it if it is a DataFrame. Called
-        with ``lock`` held."""
-        value, self.session, self.key, self.value = self.value, None, None, None
-        if isinstance(value, DataFrame):
+        """Forget the entry, unpersisting the anchor if it is a DataFrame.
+        Called with ``lock`` held."""
+        anchor = self.anchor
+        self.key = self.anchor = self.session = self.handle = None
+        if isinstance(anchor, DataFrame):
             try:
-                value.unpersist()
+                anchor.unpersist()
             except Py4JError:
                 pass  # dead session: blocks are already gone
 
 
 class SessionState:
-    """Named per-session entries, one live value per name."""
+    """Named entries, one live value per name; sibling sessions share a
+    persisted layout through Spark's CacheManager."""
 
     def __init__(self) -> None:
         self._entries: dict[str, _Entry] = {}
@@ -117,14 +139,21 @@ class SessionState:
             entry = self._entries.setdefault(name, _Entry())
         with entry.lock:
             if entry.key == key and entry.session is spark:
-                return entry.value
-            entry.drop()  # before build(): see the module docstring
-            value = build()
+                return entry.handle
+            if entry.key == key and isinstance(entry.anchor, DataFrame):
+                value = build()  # a sibling: see "Key" in the module docstring
+                if value.storageLevel != StorageLevel.NONE:
+                    entry.session, entry.handle = spark, value
+                    return value
+                entry.drop()  # the plans differ: unpersisting after build() is safe
+            else:
+                entry.drop()  # before build(): see the module docstring
+                value = build()
             if isinstance(value, DataFrame):
                 if spark is None:
                     raise TypeError(f"{name}: a shared entry cannot hold a DataFrame")
                 value = value.persist()
-            entry.session, entry.key, entry.value = spark, key, value
+            entry.key, entry.anchor, entry.session, entry.handle = key, value, spark, value
             return value
 
     def invalidate(self) -> None:

@@ -31,28 +31,42 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     reference to this package; a caller-provided session (e.g. the grading
     driver) may not have it on the workers' PYTHONPATH. Shipping a zip via
     ``addPyFile`` once per session fixes that for every downstream task.
+
+    The zip lands ahead of ``PYTHONPATH`` on the workers, so it must hold
+    the live package: it is written fresh under a unique name for each
+    SparkContext (a name reused from an earlier process, whose pid was
+    recycled, would ship that process's code) and removed when the
+    interpreter exits, once no task can fetch it any more.
     """
     sc = spark.sparkContext
     if getattr(sc, "_engine_pyfile_added", False):
         return
+    import atexit
     import os
     import tempfile
     import zipfile
 
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     parent = os.path.dirname(pkg_root)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"nyc_taxi_pyspark_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for dirpath, _dirs, files in os.walk(pkg_root):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(dirpath, f)
-                        z.write(full, os.path.relpath(full, parent))
+    fd, zpath = tempfile.mkstemp(prefix="nyc_taxi_pyspark_spark_", suffix=".zip")
+    atexit.register(_remove_quietly, zpath)
+    with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+        for dirpath, _dirs, files in os.walk(pkg_root):
+            for name in files:
+                if name.endswith(".py"):
+                    full = os.path.join(dirpath, name)
+                    z.write(full, os.path.relpath(full, parent))
     sc.addPyFile(zpath)
     sc._engine_pyfile_added = True
+
+
+def _remove_quietly(path: str) -> None:
+    import os
+
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 _TS_UNIT_CACHE: dict[str, bool] = {}

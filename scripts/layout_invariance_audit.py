@@ -132,6 +132,7 @@ def main(argv: list[str]) -> int:
     only = set(argv[1:] if argv and os.path.isdir(argv[0]) else argv)
 
     from nyc_taxi_pyspark_spark.catalog import QUERIES
+    from nyc_taxi_pyspark_spark.catalog._cache import STATE
     from nyc_taxi_pyspark_spark.session import get_spark
 
     base = get_spark("layout-audit")
@@ -171,7 +172,11 @@ def main(argv: list[str]) -> int:
             continue
         t0 = time.time()
         try:
+            # each side builds its own layouts: a sibling would otherwise
+            # read the layout the other side persisted (catalog._cache)
+            STATE.invalidate()
             ha = _canon_hash(run_a(fn).toPandas())
+            STATE.invalidate()
             hb = _canon_hash(run_b(fn).toPandas())
         except Exception as e:  # noqa: BLE001
             n_error += 1

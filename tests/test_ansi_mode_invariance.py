@@ -5,7 +5,10 @@ returns bit-identical results with `spark.sql.ansi.enabled` on and off
 (the off setting is every pre-4.0 cluster still in production); this
 subset keeps the representative arithmetic-heavy shapes — exact-cents
 folds, quantized similarity kernels, guarded divisions, overflow-prone
-integer accumulations — pinned in the default suite.
+integer accumulations — pinned in the default suite. Each side builds
+its layouts under its own conf; the off session also runs once right
+after the on session, reading the layouts the on session persisted, and
+must return the rows of its own build.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nyc_taxi_pyspark_spark.catalog import QUERIES  # noqa: E402
+from nyc_taxi_pyspark_spark.catalog._cache import STATE  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,8 +60,20 @@ def sessions(spark):
     return on, off
 
 
+def _own_build_hash(session, name) -> str:
+    """Hash the query's result with every layout built in ``session``, so
+    neither side reads a layout the other side persisted (catalog._cache)."""
+    STATE.invalidate()
+    return _canon_hash(QUERIES[name](session, SF))
+
+
 @pytest.mark.parametrize("name", SUBSET)
 def test_result_invariant_to_ansi_mode(sessions, name):
     on, off = sessions
-    fn = QUERIES[name]
-    assert _canon_hash(fn(on, SF)) == _canon_hash(fn(off, SF))
+    on_hash = _own_build_hash(on, name)
+    # off right after on, store kept: off reads each layout on anchored
+    # whose plan matches under off's conf, and builds the rest itself
+    off_after_on = _canon_hash(QUERIES[name](off, SF))
+    off_hash = _own_build_hash(off, name)
+    assert on_hash == off_hash
+    assert off_after_on == off_hash

@@ -3,12 +3,13 @@
 The catalog's persisted layouts (the co-purchase graph, the MinHash/SimHash
 signature layouts, IVF cells, the trigram postings) and the scalars derived
 from them are all named entries of ``catalog._cache.STATE``, a
-SessionState keyed by (session identity, applicationId, sf_dir). These
-tests pin the documented contract on private SessionState instances: an
-entry is a SNAPSHOT of the table at first use (same semantics as Spark's
-CACHE TABLE — in-place file mutation is not detected), invalidate() is the
-explicit escape hatch, switching sf_dir or session rebuilds without manual
-action, and a rebuilt layout is really held by Spark's CacheManager.
+SessionState keyed by (applicationId, sf_dir). These tests pin the
+documented contract on private SessionState instances: an entry is a
+SNAPSHOT of the table at first use (same semantics as Spark's CACHE TABLE —
+in-place file mutation is not detected), invalidate() is the explicit
+escape hatch, switching sf_dir rebuilds without manual action, a sibling
+session gets its own frame served from the first session's persisted
+layout, and a persisted layout is really held by Spark's CacheManager.
 """
 
 from __future__ import annotations
@@ -134,12 +135,12 @@ def test_dir_switch_rebuilds_and_displaces(spark, tmp_path):
 
 
 def test_sibling_session_rebuilds_in_its_own_session(spark, tmp_path):
-    """Sibling sessions share an applicationId but NOT temp-view catalogs
-    or SQL confs, so the session must be part of the key: handing
-    session A's frame to session B registers B's temp views in A's
-    catalog (the layout audit caught this in sql_dup_clusters_recursive)
-    and runs B's query under A's layout conf. A sibling call must rebuild
-    with a frame bound to the sibling."""
+    """Sibling sessions share an applicationId and the CacheManager but NOT
+    temp-view catalogs or SQL confs. Handing session A's frame to session B
+    would register B's temp views in A's catalog (the layout audit caught
+    this in sql_dup_clusters_recursive) and run B's query under A's conf.
+    A sibling call builds a frame bound to the sibling; the CacheManager
+    serves its plan from A's blocks, so the build starts no job."""
     table = str(tmp_path / "t.parquet")
     _write(spark, table, 4)
     state = SessionState()
@@ -148,30 +149,41 @@ def test_sibling_session_rebuilds_in_its_own_session(spark, tmp_path):
     def build_on(sess):
         def build():
             builds.append(1)
-            return sess.read.parquet(table)
+            return sess.read.schema("k LONG").parquet(table)  # no inference job
 
         return build
 
     da = state.get("t", spark, str(tmp_path), build_on(spark))
     assert da.count() == 4 and len(builds) == 1
+    n0 = _cached_rdds(spark)
 
     sib = spark.newSession()
-    db = state.get("t", sib, str(tmp_path), build_on(sib))
-    assert len(builds) == 2  # same appId, different session => rebuild
-    assert db.sparkSession is sib
+    sc = spark.sparkContext
+    sc.setJobGroup("sibling-build", "jobs started by the sibling's build")
+    try:
+        db = state.get("t", sib, str(tmp_path), build_on(sib))
+        assert sc.statusTracker().getJobIdsForGroup("sibling-build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(builds) == 2 and db.sparkSession is sib
+    assert not db.is_cached  # the anchor owns the cache entry
+    # the sibling's next call returns its handle without building
+    assert state.get("t", sib, str(tmp_path), build_on(sib)) is db
+    assert len(builds) == 2
     # the sibling's frame registers temp views in the SIBLING's catalog
     db.createOrReplaceTempView("__cache_sib_probe")
     assert sib.sql("SELECT COUNT(*) AS n FROM __cache_sib_probe").first().n == 4
+    assert _cached_rdds(spark) == n0  # read from A's blocks
+    # dropTempView uncaches every cached plan equal to the view's, so this
+    # unpersists the anchor too: check the blocks before it
     sib.catalog.dropTempView("__cache_sib_probe")
     state.invalidate()
 
 
 def test_sibling_switch_keeps_layout_in_cache_manager(spark, tmp_path):
-    """Sibling sessions share Spark's CacheManager, which matches cached
-    plans by result. When sibling B builds the plan A's displaced entry
-    holds, B's persist() is a no-op, so unpersisting A's frame after it
-    would remove the only cache entry and B's layout would be recomputed
-    on every use. The displaced frame is unpersisted before the build."""
+    """Switching to a sibling keeps the one CacheManager entry the anchor
+    owns: the sibling's frame is served by A's blocks, and switching back
+    and forth materializes nothing new."""
     table = str(tmp_path / "t.parquet")
     _write(spark, table, 6)
     state = SessionState()
@@ -184,7 +196,76 @@ def test_sibling_switch_keeps_layout_in_cache_manager(spark, tmp_path):
     db = state.get("t", sib, str(tmp_path), lambda: sib.read.parquet(table))
     assert db.count() == 6
     assert _in_cache_manager(db)
-    assert _cached_rdds(spark) == n0 + 1  # B's blocks; A's are gone
+    assert _cached_rdds(spark) == n0 + 1  # A's blocks, read by both
+    da2 = state.get("t", spark, str(tmp_path), lambda: spark.read.parquet(table))
+    assert da2.count() == 6 and _in_cache_manager(da2)
+    assert _cached_rdds(spark) == n0 + 1
+    state.invalidate()
+
+
+def test_sibling_with_another_plan_displaces_the_anchor(spark, tmp_path):
+    """A sibling whose plan the CacheManager does not serve (here its build
+    adds a filter) builds once, displaces the anchor and persists its own
+    frame: one cached RDD is left, holding the sibling's rows."""
+    table = str(tmp_path / "t.parquet")
+    _write(spark, table, 6)
+    state = SessionState()
+    n0 = _cached_rdds(spark)
+    da = state.get("t", spark, str(tmp_path), lambda: spark.read.parquet(table))
+    assert da.count() == 6 and _cached_rdds(spark) == n0 + 1
+
+    sib = spark.newSession()
+    builds = []
+
+    def build():
+        builds.append(1)
+        return sib.read.parquet(table).filter("k > 1")
+
+    db = state.get("t", sib, str(tmp_path), build)
+    assert len(builds) == 1 and db.is_cached and db.sparkSession is sib
+    assert db.count() == 4 and _in_cache_manager(db)
+    assert _cached_rdds(spark) == n0 + 1  # A's blocks are gone
+    assert not _in_cache_manager(spark.read.parquet(table))
+    state.invalidate()
+
+
+def test_sibling_frame_after_invalidate_is_not_served(spark, tmp_path):
+    """invalidate() unpersists the anchor, so a sibling's new frame over
+    the same plan is no longer served from the cache."""
+    table = str(tmp_path / "t.parquet")
+    _write(spark, table, 3)
+    state = SessionState()
+    state.get("t", spark, str(tmp_path), lambda: spark.read.parquet(table)).count()
+    sib = spark.newSession()
+    db = state.get("t", sib, str(tmp_path), lambda: sib.read.parquet(table))
+    assert db.count() == 3 and _in_cache_manager(db)
+
+    state.invalidate()
+    assert not _in_cache_manager(sib.read.parquet(table))
+
+
+def test_concurrent_siblings_materialize_once(spark, tmp_path):
+    """K sibling sessions in K request threads share one anchor: one cached
+    RDD is materialized, and every thread counts the same rows."""
+    table = str(tmp_path / "t.parquet")
+    _write(spark, table, 9)
+    state = SessionState()
+    n0 = _cached_rdds(spark)
+    counts = []
+
+    def worker():
+        sess = spark.newSession()
+        df = state.get("t", sess, str(tmp_path), lambda: sess.read.parquet(table))
+        counts.append(df.count())
+
+    threads = [threading.Thread(target=worker, daemon=True) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert counts == [9] * 4
+    assert _cached_rdds(spark) == n0 + 1
     state.invalidate()
 
 

@@ -25,6 +25,7 @@ import math
 import pytest
 
 from nyc_taxi_pyspark_spark.catalog import QUERIES
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
 
 SF = "/root/testdata/sf0.001"
 
@@ -97,10 +98,8 @@ SWEEP = [
     # risk sets over the distinct-duration frame
     "stats_ks_test",
     "events_survival_km",
-    # regression for the session-keyed layout cache: this query registers
-    # a temp view over the cached pair frame, so running it in two
-    # sibling sessions breaks (TABLE_OR_VIEW_NOT_FOUND) if the cache ever
-    # hands one session's frame to the other again
+    # registers a temp view over the cached pair frame (a sibling reading
+    # another session's layout through it: tests/test_sibling_sessions.py)
     "sql_dup_clusters_recursive",
 ]
 
@@ -130,9 +129,15 @@ def sessions(spark):
     return lo, hi
 
 
+def _own_build_hash(session, name) -> str:
+    """Hash the query's result with every layout built in ``session``:
+    without the invalidate, a sibling would read the layout the other side
+    persisted (catalog._cache), and the sweep would not test its own build."""
+    STATE.invalidate()
+    return _canon_hash(QUERIES[name](session, SF))
+
+
 @pytest.mark.parametrize("name", SWEEP)
 def test_result_invariant_to_shuffle_partitions(sessions, name):
     lo, hi = sessions
-    assert _canon_hash(QUERIES[name](lo, SF)) == _canon_hash(
-        QUERIES[name](hi, SF)
-    )
+    assert _own_build_hash(lo, name) == _own_build_hash(hi, name)
