@@ -59,9 +59,9 @@ matching cached plan, and the unpersist would drop the only cache entry:
 the new layout would be recomputed on every use while ``is_cached`` and
 ``storageLevel`` still read true.
 
-Locking. One lock per name: the serving layer runs catalog queries from
-concurrent request threads, and two simultaneous misses on one name would
-double-build and leak the loser's persist. ``build()`` runs under its
+Locking. One lock per name: the web server's ``/kpi`` route runs the taxi
+KPI queries from concurrent request threads, and two simultaneous misses on
+one name would double-build and leak the loser's persist. ``build()`` runs under its
 name's lock — a duplicate build costs more than the serialization it
 prevents — while other names build in parallel, and a build may read
 another entry (syndication's graph reads the pair layout).

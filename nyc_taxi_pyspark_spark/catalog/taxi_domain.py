@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
 from nyc_taxi_pyspark_spark.catalog.registry import query
 from nyc_taxi_pyspark_spark.datagen import DATAGEN_VERSION, write_trips_parquet
 from nyc_taxi_pyspark_spark.functions.exact import (
@@ -31,7 +32,7 @@ from nyc_taxi_pyspark_spark.operators.taxi import (
     kpi_heatmap,
     payment_lookup,
 )
-from nyc_taxi_pyspark_spark.schemas import PAYMENT_LOOKUP_ROWS
+from nyc_taxi_pyspark_spark.schemas import PAYMENT_LOOKUP_ROWS, TRIPS_SCHEMA
 
 _TRIPS_SEED, _TRIPS_N = 42, 5000
 
@@ -51,22 +52,28 @@ def _ensure_trips() -> str:
 
 # Best-effort eager write (pandas/pyarrow only — no Spark needed) so an
 # oracle-before-Spark run order still finds the file; on a read-only
-# checkout this no-ops and `_featured` generates lazily at first query.
+# checkout this no-ops and `featured` generates lazily at first query.
 try:
     _ensure_trips()
 except OSError:
     pass
 
 
-def _featured(spark):
-    from nyc_taxi_pyspark_spark.schemas import TRIPS_SCHEMA
-
+def featured(spark):
+    """The cleaned, deduplicated, feature-engineered trips: one session
+    layout, read by the KPI queries below and by the serving layer's KPI,
+    scoring and plot surfaces. Keyed on the fixture path, not ``sf_dir``:
+    the table does not depend on it."""
     # Pin UTC and read with the explicit schema: the pandas-written parquet
     # carries naive (NTZ) timestamps; under UTC the LTZ read preserves the
     # wall time, matching DuckDB's naive TIMESTAMP reading bit-for-bit.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    trips = spark.read.schema(TRIPS_SCHEMA).parquet(_ensure_trips())
-    return engineer_features(clean_trips(trips))
+
+    def build():
+        trips = spark.read.schema(TRIPS_SCHEMA).parquet(_ensure_trips())
+        return engineer_features(clean_trips(trips))
+
+    return STATE.get("taxi.featured", spark, _TRIPS_PATH, build)
 
 
 # ---------------------------------------------------------------- oracle SQL
@@ -132,7 +139,7 @@ _PAYMENT_VALUES = ", ".join(
 def taxi_kpi_by_payment(spark, sf_dir):
     """Reference flagship KPI (spark_jobs/02e:57-66): clean → enrich with
     the payment dimension (broadcast) → trips + avg total per label."""
-    return kpi_by_payment(_featured(spark), payment_lookup(spark))
+    return kpi_by_payment(featured(spark), payment_lookup(spark))
 
 
 @query(
@@ -150,7 +157,7 @@ def taxi_kpi_by_payment(spark, sf_dir):
 def taxi_kpi_heatmap(spark, sf_dir):
     """DoW×hour heatmap over the cleaned, feature-engineered trips
     (spark_jobs/05c:122-129)."""
-    return kpi_heatmap(_featured(spark))
+    return kpi_heatmap(featured(spark))
 
 
 @query(
@@ -168,4 +175,4 @@ def taxi_kpi_heatmap(spark, sf_dir):
 )
 def taxi_kpi_distance_buckets(spark, sf_dir):
     """Distance-bucket KPI (spark_jobs/05b:92-99)."""
-    return kpi_distance_buckets(_featured(spark))
+    return kpi_distance_buckets(featured(spark))

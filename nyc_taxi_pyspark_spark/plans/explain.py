@@ -1,9 +1,11 @@
 """Physical-plan introspection (SURVEY.md §4 discipline).
 
 The engine's rule: after an operator is correct, read its plan and keep it
-honest. These helpers turn `.explain("formatted")` into assertable
-properties — used by tests/test_plans.py so plan regressions (lost pushdown,
-join strategy flips, codegen breaks) fail CI instead of shipping.
+honest. These helpers read `.explain("formatted")`: the web ``/explain``
+route shows the plan and its shuffle count, ``scripts/dump_plans.py``
+snapshots them into PLANS.md, and tests/test_plans.py turns them into
+assertable properties, so plan regressions (lost pushdown, join strategy
+flips) fail CI instead of shipping.
 """
 
 from __future__ import annotations
@@ -15,35 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def scan_pushed_filters(df: DataFrame) -> str:
-    """The PushedFilters line(s) of the parquet scan."""
-    return "\n".join(
-        line.strip()
-        for line in formatted_plan(df).splitlines()
-        if "PushedFilters" in line
-    )
-
-
-def scan_read_schema(df: DataFrame) -> str:
-    return "\n".join(
-        line.strip()
-        for line in formatted_plan(df).splitlines()
-        if "ReadSchema" in line
-    )
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df) or (
-        "BroadcastNestedLoopJoin" in formatted_plan(df)
-    )
-
-
-def uses_take_ordered(df: DataFrame) -> bool:
-    """orderBy().limit() should compile to TakeOrderedAndProject — a
-    per-partition heap + k-row merge, never a global sort."""
-    return "TakeOrderedAndProject" in formatted_plan(df)
 
 
 def count_nodes(df: DataFrame, op: str) -> int:

@@ -35,15 +35,6 @@ def _print_pdf(pdf, max_rows: int = 50) -> None:
     print(with_opts)
 
 
-def _featured_trips(spark, n: int = 5000):
-    from nyc_taxi_pyspark_spark.datagen import make_trips_pdf
-    from nyc_taxi_pyspark_spark.operators.taxi import clean_trips, engineer_features
-    from nyc_taxi_pyspark_spark.schemas import TRIPS_SCHEMA
-
-    trips = spark.createDataFrame(make_trips_pdf(n=n), TRIPS_SCHEMA)
-    return engineer_features(clean_trips(trips))
-
-
 def cmd_tables(eng, _args) -> int:
     for t in TESTDATA_TABLES:
         print(t)
@@ -81,50 +72,16 @@ def cmd_repl(eng, args) -> int:
 
 
 def cmd_kpi(eng, args) -> int:
-    from nyc_taxi_pyspark_spark.operators.taxi import (
-        kpi_by_payment,
-        kpi_distance_buckets,
-        kpi_heatmap,
-        payment_lookup,
-    )
     from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
 
-    featured = _featured_trips(eng.spark, n=args.trips)
-    if args.which == "payment":
-        df = kpi_by_payment(featured, payment_lookup(eng.spark))
-    elif args.which == "heatmap":
-        df = kpi_heatmap(featured)
-    else:
-        df = kpi_distance_buckets(featured)
-    _print_pdf(to_pandas_sanitized(df, max_rows=200), max_rows=200)
+    _print_pdf(to_pandas_sanitized(eng.kpi(args.which), max_rows=200), max_rows=200)
     return 0
 
 
 def cmd_report(eng, args) -> int:
-    from nyc_taxi_pyspark_spark.operators.taxi import (
-        kpi_by_payment,
-        kpi_distance_buckets,
-        kpi_heatmap,
-        payment_lookup,
-    )
-    from nyc_taxi_pyspark_spark.serve.plots import export_plot_reports
-    from nyc_taxi_pyspark_spark.serve.reports import (
-        export_reports,
-        list_reports,
-        render_index_html,
-    )
+    from nyc_taxi_pyspark_spark.serve.reports import export_kpi_reports, list_reports
 
-    featured = _featured_trips(eng.spark, n=args.trips)
-    export_reports(
-        {
-            "kpi_by_payment": kpi_by_payment(featured, payment_lookup(eng.spark)),
-            "kpi_heatmap": kpi_heatmap(featured),
-            "kpi_distance_buckets": kpi_distance_buckets(featured),
-        },
-        args.out,
-    )
-    export_plot_reports(featured, args.out)
-    print(render_index_html(args.out))
+    print(export_kpi_reports(eng, args.out))
     for name in list_reports(args.out):
         print(name)
     return 0
@@ -132,13 +89,13 @@ def cmd_report(eng, args) -> int:
 
 def cmd_score(eng, args) -> int:
     """Model scoring with threshold (app5.py:347-428): sample → score."""
+    from nyc_taxi_pyspark_spark.catalog.taxi_domain import featured
     from nyc_taxi_pyspark_spark.serve.scoring import load_model, score_batch
     from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
 
-    featured = _featured_trips(eng.spark, n=args.trips).na.fill({"payment_type": 5})
     scored = score_batch(
         load_model(args.model),
-        featured,
+        featured(eng.spark).na.fill({"payment_type": 5}),
         threshold=args.threshold,
         sample_n=args.n,
     )
@@ -148,6 +105,8 @@ def cmd_score(eng, args) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from nyc_taxi_pyspark_spark.serve.engine import KPIS
+
     parser = argparse.ArgumentParser(prog="engine-app", description=__doc__)
     parser.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     sub = parser.add_subparsers(dest="cmd", required=True)
@@ -162,16 +121,13 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("repl")
     p.add_argument("-n", type=int, default=50)
     p = sub.add_parser("kpi")
-    p.add_argument("--which", choices=["payment", "heatmap", "distance"], default="payment")
-    p.add_argument("--trips", type=int, default=5000)
+    p.add_argument("--which", choices=list(KPIS), default="payment")
     p = sub.add_parser("report")
     p.add_argument("--out", required=True)
-    p.add_argument("--trips", type=int, default=5000)
     p = sub.add_parser("score")
     p.add_argument("--model", required=True)
     p.add_argument("--threshold", type=float, default=0.5)
     p.add_argument("-n", type=int, default=50)
-    p.add_argument("--trips", type=int, default=5000)
 
     args = parser.parse_args(argv)
     eng = _build_engine(args.sf_dir)

@@ -18,6 +18,14 @@ from nyc_taxi_pyspark_spark.sources.io import (
     to_pandas_sanitized,
 )
 
+# The KPI dashboards (app5.py:278-308) are the catalog's oracle-checked taxi
+# queries, by dashboard name.
+KPIS = {
+    "payment": "taxi_kpi_by_payment",
+    "heatmap": "taxi_kpi_heatmap",
+    "distance": "taxi_kpi_distance_buckets",
+}
+
 
 class Engine:
     """SQL front door + table registry over a SparkSession (V1/V2)."""
@@ -55,6 +63,13 @@ class Engine:
     def preview(self, name: str, n: int = 10) -> pd.DataFrame:
         """V2 — bounded preview through the Arrow-path sanitizer."""
         return to_pandas_sanitized(self.table(name), max_rows=n)
+
+    def kpi(self, which: str) -> DataFrame:
+        """V3 — the KPI dashboard ``which`` (a key of :data:`KPIS`), built
+        by its catalog query over the shared featured-trips layout."""
+        from nyc_taxi_pyspark_spark.catalog import QUERIES
+
+        return QUERIES[KPIS[which]](self.spark, self.sf_dir)
 
     def summary(self, name: str) -> pd.DataFrame:
         """V2 — row count + per-column null counts in one pass."""

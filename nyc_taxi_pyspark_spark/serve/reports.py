@@ -1,9 +1,9 @@
 """Report artifact surface (SURVEY.md §2.12 V3/V4; reference
 spark_jobs/05c_make_report.py:141-183 + streamlit_app/app5.py:311-344).
 
-KPI tables are computed by the operator library and exported one
-single-file CSV each under an artifact directory — the reference's report
-convention. ``coalesce(1)`` is correct here: these are ≤ a few hundred rows.
+KPI tables are the catalog's taxi KPI queries, exported one single-file
+CSV each under an artifact directory — the reference's report convention.
+``coalesce(1)`` is correct here: these are ≤ a few hundred rows.
 """
 
 from __future__ import annotations
@@ -26,6 +26,22 @@ def export_reports(
         write_csv_single(df, path, limit=limit)
         paths[name] = path
     return paths
+
+
+def export_kpi_reports(eng, out_dir: str) -> str:
+    """The KPI dashboards as CSV reports, the trip plots as PNGs and the
+    ``index.html`` browser over both (the CLI ``report`` command and the
+    web ``/reports`` route); returns the index path."""
+    from nyc_taxi_pyspark_spark.catalog.taxi_domain import featured
+    from nyc_taxi_pyspark_spark.serve.engine import KPIS
+    from nyc_taxi_pyspark_spark.serve.plots import export_plot_reports
+
+    export_reports(
+        {name.removeprefix("taxi_"): eng.kpi(which) for which, name in KPIS.items()},
+        out_dir,
+    )
+    export_plot_reports(featured(eng.spark), out_dir)
+    return render_index_html(out_dir)
 
 
 def list_reports(out_dir: str) -> list[str]:

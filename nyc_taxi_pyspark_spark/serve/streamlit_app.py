@@ -40,12 +40,6 @@ EXAMPLE_SQL = (
 )
 
 
-def _featured(eng, n: int = 5000):
-    from nyc_taxi_pyspark_spark.serve.app import _featured_trips
-
-    return _featured_trips(eng.spark, n=n)
-
-
 def tab_preview_data(eng, table: str = "orders", n: int = 100):
     """Tab 1 (app5.py:245-258): head preview + quick summary."""
     return eng.preview(table, n=n), eng.summary(table)
@@ -59,27 +53,16 @@ def tab_sql_run(eng, text: str, limit: int = 5000):
     return to_pandas_sanitized(eng.sql(text), max_rows=limit)
 
 
-def tab_kpi_frames(eng, n_trips: int = 5000):
-    """Tab 3 (app5.py:278-308): KPIs by payment, avg fare by hour,
-    distance-bucket distribution — pandas frames ready for st.dataframe /
-    st.line_chart / st.bar_chart."""
-    from nyc_taxi_pyspark_spark.operators.taxi import (
-        kpi_by_payment,
-        kpi_distance_buckets,
-        kpi_heatmap,
-        payment_lookup,
-    )
+def tab_kpi_frames(eng):
+    """Tab 3 (app5.py:278-308): KPIs by payment, dow×hour heatmap,
+    distance-bucket distribution — the catalog's taxi KPI queries as pandas
+    frames ready for st.dataframe / st.bar_chart."""
+    from nyc_taxi_pyspark_spark.serve.engine import KPIS
     from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
 
-    featured = _featured(eng, n=n_trips)
     return {
-        "by_payment": to_pandas_sanitized(
-            kpi_by_payment(featured, payment_lookup(eng.spark)), max_rows=1000
-        ),
-        "heatmap": to_pandas_sanitized(kpi_heatmap(featured), max_rows=1000),
-        "distance_buckets": to_pandas_sanitized(
-            kpi_distance_buckets(featured), max_rows=1000
-        ),
+        name.removeprefix("taxi_kpi_"): to_pandas_sanitized(eng.kpi(which), max_rows=1000)
+        for which, name in KPIS.items()
     }
 
 

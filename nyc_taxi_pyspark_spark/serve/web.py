@@ -53,7 +53,7 @@ from urllib.parse import parse_qs, urlparse
 
 import pandas as pd
 
-from nyc_taxi_pyspark_spark.serve.engine import Engine
+from nyc_taxi_pyspark_spark.serve.engine import KPIS, Engine
 
 _STYLE = (
     "<style>body{font-family:sans-serif;margin:2em}table{border-collapse:"
@@ -80,10 +80,11 @@ def _table_html(pdf: pd.DataFrame) -> str:
 
 
 class WebApp:
-    """Route handlers + lazily-built shared state (featured trips, reports).
+    """Route handlers + lazily-built shared state (reports, uploaded views).
 
     Separate from the HTTP handler class so state lives for the server's
-    lifetime, not per-request.
+    lifetime, not per-request. The featured trips behind the KPI, report
+    and score routes are the catalog's ``taxi.featured`` session layout.
     """
 
     def __init__(
@@ -91,59 +92,25 @@ class WebApp:
         engine: Engine,
         model_dir: str | None = None,
         reports_dir: str | None = None,
-        trips_n: int = 5000,
         preview_cap: int = 200,
     ):
         self.engine = engine
         self.model_dir = model_dir
         self.reports_dir = reports_dir
-        self.trips_n = trips_n
         self.preview_cap = preview_cap
-        self._featured = None
         self._reports_ready = False
         self._uploaded: set[str] = set()
-        # RLock: ensure_reports() calls featured_trips() while holding it.
-        self._lock = threading.RLock()
+        self._lock = threading.Lock()
 
     # -- shared lazy state ---------------------------------------------------
-    def featured_trips(self):
-        with self._lock:
-            if self._featured is None:
-                from nyc_taxi_pyspark_spark.serve.app import _featured_trips
-
-                self._featured = _featured_trips(self.engine.spark, n=self.trips_n).cache()
-            return self._featured
-
     def ensure_reports(self) -> str:
         with self._lock:
             if not self._reports_ready:
-                from nyc_taxi_pyspark_spark.operators.taxi import (
-                    kpi_by_payment,
-                    kpi_distance_buckets,
-                    kpi_heatmap,
-                    payment_lookup,
-                )
-                from nyc_taxi_pyspark_spark.serve.plots import export_plot_reports
-                from nyc_taxi_pyspark_spark.serve.reports import (
-                    export_reports,
-                    render_index_html,
-                )
+                from nyc_taxi_pyspark_spark.serve.reports import export_kpi_reports
 
                 if self.reports_dir is None:
                     self.reports_dir = tempfile.mkdtemp(prefix="engine-reports-")
-                featured = self.featured_trips()
-                export_reports(
-                    {
-                        "kpi_by_payment": kpi_by_payment(
-                            featured, payment_lookup(self.engine.spark)
-                        ),
-                        "kpi_heatmap": kpi_heatmap(featured),
-                        "kpi_distance_buckets": kpi_distance_buckets(featured),
-                    },
-                    self.reports_dir,
-                )
-                export_plot_reports(featured, self.reports_dir)
-                render_index_html(self.reports_dir)
+                export_kpi_reports(self.engine, self.reports_dir)
                 self._reports_ready = True
             return self.reports_dir
 
@@ -229,28 +196,13 @@ class WebApp:
         return 200, "text/html", _page("sql", _table_html(pdf))
 
     def kpi(self, q) -> tuple[int, str, bytes]:
-        from nyc_taxi_pyspark_spark.operators.taxi import (
-            kpi_by_payment,
-            kpi_distance_buckets,
-            kpi_heatmap,
-            payment_lookup,
-        )
         from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
 
         which = q.get("which", ["payment"])[0]
-        featured = self.featured_trips()
-        if which == "heatmap":
-            df = kpi_heatmap(featured)
-        elif which == "distance":
-            df = kpi_distance_buckets(featured)
-        else:
-            df = kpi_by_payment(featured, payment_lookup(self.engine.spark))
-        pdf = to_pandas_sanitized(df, max_rows=self.preview_cap)
-        links = (
-            "<p><a href='/kpi?which=payment'>payment</a> | "
-            "<a href='/kpi?which=heatmap'>heatmap</a> | "
-            "<a href='/kpi?which=distance'>distance</a></p>"
-        )
+        if which not in KPIS:
+            return 400, "text/plain", f"which must be one of {', '.join(KPIS)}".encode()
+        pdf = to_pandas_sanitized(self.engine.kpi(which), max_rows=self.preview_cap)
+        links = "<p>" + " | ".join(f"<a href='/kpi?which={w}'>{w}</a>" for w in KPIS) + "</p>"
         return 200, "text/html", _page(f"kpi: {which}", links + _table_html(pdf))
 
     def reports(self, _q) -> tuple[int, str, bytes]:
@@ -268,6 +220,7 @@ class WebApp:
                 b"no model configured - start the server with --model <dir> "
                 b"(train one with ml.pipelines.fit_and_evaluate_classification)",
             )
+        from nyc_taxi_pyspark_spark.catalog.taxi_domain import featured
         from nyc_taxi_pyspark_spark.serve.scoring import (
             load_metrics,
             load_model,
@@ -277,8 +230,8 @@ class WebApp:
 
         threshold = float(q.get("threshold", ["0.5"])[0])
         n = min(int(q.get("n", ["50"])[0]), self.preview_cap)
-        featured = self.featured_trips().na.fill({"payment_type": 5})
-        scored = score_batch(load_model(self.model_dir), featured, threshold, sample_n=n)
+        trips = featured(self.engine.spark).na.fill({"payment_type": 5})
+        scored = score_batch(load_model(self.model_dir), trips, threshold, sample_n=n)
         cols = [
             c for c in ("proba1", "pred_at_threshold", "prediction") if c in scored.columns
         ]
@@ -398,18 +351,12 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--port", type=int, default=8080)
     parser.add_argument("--model", default=None, help="PipelineModel dir for /score")
     parser.add_argument("--reports-out", default=None)
-    parser.add_argument("--trips", type=int, default=5000)
     args = parser.parse_args(argv)
 
     from nyc_taxi_pyspark_spark.session import get_spark
 
     engine = Engine(get_spark("engine-web", shuffle_partitions=8), args.sf_dir)
-    app = WebApp(
-        engine,
-        model_dir=args.model,
-        reports_dir=args.reports_out,
-        trips_n=args.trips,
-    )
+    app = WebApp(engine, model_dir=args.model, reports_dir=args.reports_out)
     server = make_server(app, host=args.host, port=args.port)
     print(f"engine-web listening on http://{args.host}:{server.server_address[1]}")
     server.serve_forever()

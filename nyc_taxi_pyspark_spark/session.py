@@ -60,6 +60,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 16g: in local mode the
+    driver heap is the whole cluster, and a fixed 16g on a 16 GB host lets
+    one busy JVM starve every other process."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return f"{min(half, 16 << 30) >> 20}m"
+
+
 def _engine_conf(cpus: int, shuffle_partitions: int | None, driver_memory: str | None) -> dict[str, str]:
     return {
         # AQE: runtime partition coalescing, skew-join splitting, join re-planning.
@@ -80,7 +88,9 @@ def _engine_conf(cpus: int, shuffle_partitions: int | None, driver_memory: str |
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         # Quieter, faster local runs.
         "spark.ui.enabled": "false",
-        "spark.driver.memory": driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        "spark.driver.memory": driver_memory
+        or os.environ.get("SPARK_DRIVER_MEMORY")
+        or _default_driver_memory(),
     }
 
 

@@ -73,3 +73,20 @@ def test_cli_preview_and_repl():
         stdin="SELECT COUNT(*) AS n FROM nation;\n\n",
     )
     assert "n" in stdout
+
+
+def test_cli_kpi_prints_the_catalog_query(spark, monkeypatch, capsys):
+    """``app kpi --which w`` prints the rows of the catalog query behind
+    dashboard ``w`` (run in-process on the test session)."""
+    from nyc_taxi_pyspark_spark.catalog import QUERIES
+    from nyc_taxi_pyspark_spark.serve import app
+    from nyc_taxi_pyspark_spark.serve.engine import KPIS, Engine
+    from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
+
+    monkeypatch.setattr(app, "_build_engine", lambda sf_dir: Engine(spark, sf_dir))
+    for which, name in KPIS.items():
+        assert app.main(["--sf-dir", SF_DIR, "kpi", "--which", which]) == 0
+        printed = capsys.readouterr().out
+        app._print_pdf(to_pandas_sanitized(QUERIES[name](spark, SF_DIR), max_rows=200), max_rows=200)
+        assert printed == capsys.readouterr().out
+        assert len(printed.splitlines()) > 1

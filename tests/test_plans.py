@@ -8,17 +8,38 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nyc_taxi_pyspark_spark.catalog import QUERIES
-from nyc_taxi_pyspark_spark.plans.explain import (
-    formatted_plan,
-    has_broadcast_join,
-    scan_pushed_filters,
-    scan_read_schema,
-    shuffle_count,
-    uses_take_ordered,
-)
+from nyc_taxi_pyspark_spark.plans.explain import formatted_plan, shuffle_count
 from nyc_taxi_pyspark_spark.sources.io import load_table
 
 SF = "/root/testdata/sf0.001"
+
+
+def scan_pushed_filters(df) -> str:
+    """The PushedFilters line(s) of the parquet scan."""
+    return "\n".join(
+        line.strip()
+        for line in formatted_plan(df).splitlines()
+        if "PushedFilters" in line
+    )
+
+
+def scan_read_schema(df) -> str:
+    return "\n".join(
+        line.strip()
+        for line in formatted_plan(df).splitlines()
+        if "ReadSchema" in line
+    )
+
+
+def has_broadcast_join(df) -> bool:
+    plan = formatted_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def uses_take_ordered(df) -> bool:
+    """orderBy().limit() should compile to TakeOrderedAndProject — a
+    per-partition heap + k-row merge, never a global sort."""
+    return "TakeOrderedAndProject" in formatted_plan(df)
 
 
 def test_filter_pushdown_reaches_scan(spark):

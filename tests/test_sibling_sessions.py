@@ -19,7 +19,8 @@ second call is only built:
 
 The store-reading queries are found by wrapping ``STATE.get`` while A
 builds each query, not from a hand-written list: every catalog query is a
-case, and one that reads no entry is skipped (58 read one).
+case, and one that reads no entry is skipped (61 read one, the three
+``taxi_kpi_*`` queries among them).
 """
 
 from __future__ import annotations

@@ -35,9 +35,16 @@ def test_tab_callbacks_return_real_frames(spark):
     pdf = sa.tab_sql_run(eng, "SELECT COUNT(*) AS n FROM orders")
     assert list(pdf.columns) == ["n"] and int(pdf["n"][0]) > 0
 
-    frames = sa.tab_kpi_frames(eng, n_trips=500)
+    frames = sa.tab_kpi_frames(eng)
     assert set(frames) == {"by_payment", "heatmap", "distance_buckets"}
     assert all(len(f) > 0 for f in frames.values())
+    # the KPI tab shows the catalog's oracle-checked taxi queries
+    from nyc_taxi_pyspark_spark.catalog import QUERIES
+    from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
+
+    for key, f in frames.items():
+        want = to_pandas_sanitized(QUERIES[f"taxi_kpi_{key}"](spark, SF), max_rows=1000)
+        pd.testing.assert_frame_equal(f, want)
 
 
 def test_report_and_image_listing(spark, tmp_path):

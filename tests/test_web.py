@@ -5,25 +5,25 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 import urllib.error
 import urllib.parse
 import urllib.request
 
 import pytest
 
-from nyc_taxi_pyspark_spark.serve.engine import Engine
-from nyc_taxi_pyspark_spark.serve.web import WebApp, make_server
+from nyc_taxi_pyspark_spark.catalog import QUERIES
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
+from nyc_taxi_pyspark_spark.serve.engine import KPIS, Engine
+from nyc_taxi_pyspark_spark.serve.web import WebApp, _table_html, make_server
+from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def web(spark, tmp_path_factory):
-    app = WebApp(
-        Engine(spark, SF_DIR),
-        reports_dir=str(tmp_path_factory.mktemp("reports")),
-        trips_n=500,
-    )
+    app = WebApp(Engine(spark, SF_DIR), reports_dir=str(tmp_path_factory.mktemp("reports")))
     server = make_server(app)
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
@@ -77,6 +77,50 @@ def test_kpi_tabs(web):
     assert status == 200 and "payment_label" in body
     status, body = _get(f"{web}/kpi?which=distance")
     assert status == 200 and "bucket" in body
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        _get(f"{web}/kpi?which=daily")
+    assert exc.value.code == 400
+
+
+def test_concurrent_kpi_builds_the_layout_once(web, spark):
+    """Four /kpi requests at once on a cold store: one ``taxi.featured``
+    build between them, and every reply holds the rows of the catalog
+    query behind it."""
+    builds = []
+    get = STATE.get
+
+    def counting(name, spark_, sf_dir, build):
+        def counted():
+            builds.append(name)
+            time.sleep(0.2)  # hold the build open while the other requests arrive
+            return build()
+
+        return get(name, spark_, sf_dir, counted if name == "taxi.featured" else build)
+
+    which = ["payment", "heatmap", "distance", "payment"]
+    bodies: dict[int, str] = {}
+    start = threading.Barrier(len(which), timeout=60)
+
+    def request(i):
+        start.wait()
+        bodies[i] = _get(f"{web}/kpi?which={which[i]}")[1]
+
+    STATE.invalidate()
+    STATE.get = counting
+    try:
+        threads = [threading.Thread(target=request, args=(i,), daemon=True) for i in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert len(bodies) == 4
+        assert builds == ["taxi.featured"]
+        for i, w in enumerate(which):
+            want = to_pandas_sanitized(QUERIES[KPIS[w]](spark, SF_DIR), max_rows=200)
+            assert len(want) > 0 and _table_html(want) in bodies[i], w
+        assert builds == ["taxi.featured"]  # the serial runs read the same layout
+    finally:
+        del STATE.get
 
 
 def test_reports_browser(web):
@@ -169,14 +213,14 @@ def web_with_model(spark, tmp_path_factory):
         save_model_with_metrics,
         train_test_split,
     )
-    from nyc_taxi_pyspark_spark.serve.app import _featured_trips
+    from nyc_taxi_pyspark_spark.catalog.taxi_domain import featured
 
-    featured = _featured_trips(spark, n=500).na.fill({"payment_type": 5})
+    trips = featured(spark).na.fill({"payment_type": 5})
     cfg = FeatureConfig(
         numeric_cols=["trip_distance", "pickup_hour"],
         categorical_cols=["payment_type"],
     )
-    train, test = train_test_split(featured, "label_tip")
+    train, test = train_test_split(trips, "label_tip")
     model, metrics = fit_and_evaluate_classification(
         classification_lr(cfg, "label_tip"), train, test, "label_tip"
     )
@@ -185,7 +229,6 @@ def web_with_model(spark, tmp_path_factory):
     app = WebApp(
         Engine(spark, SF_DIR),
         reports_dir=str(tmp_path_factory.mktemp("reports2")),
-        trips_n=500,
         model_dir=out,
     )
     server = make_server(app)
