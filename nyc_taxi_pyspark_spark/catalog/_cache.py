@@ -1,11 +1,14 @@
-"""Per-session catalog state: persisted layouts and driver-side scalars.
+"""Per-session catalog state: persisted layouts, driver-side scalars and
+running streams.
 
 Catalog queries that reuse a derived layout (bucketed embeddings, MinHash /
 SimHash signature scans, candidate pair sets) persist it once per
 (application, table dir) — locally a ``persist()``, at 100 TB a layout
 written next to the table at ingest. Scalars derived from those layouts
 (a row count, a split point, a codebook) live beside them under the same
-key. Every entry is reached through the one module-level :data:`STATE`::
+key, and so do the running ``StreamingQuery`` objects of the persistent
+stream queries (``streaming.runner.run_stream_cached``). Every entry is
+reached through the one module-level :data:`STATE`::
 
     STATE.get("text.pairs", spark, sf_dir, build)
 
@@ -45,12 +48,20 @@ carry A's analysis-time conf (ANSI eval modes baked into casts and
 arithmetic) into B: the CacheManager decides what is shared. A scalar is
 not shared: a call from another session rebuilds it and displaces it.
 
+A running stream is bound to its session like a scalar (its memory-sink
+table is a temp view of the session that started it), so a sibling's call
+starts its own query and the displaced one is stopped: one running query
+per name. Every ``get`` that returns a stream first drains it
+(``processAllAvailable``), and a held query that is no longer active (it
+failed, or was stopped from outside) is a miss and is started again.
+
 Bounded storage. Each name holds ONE live entry, and only its anchor is
 persisted; a sibling's handle is never persisted, so it has nothing to
-unpersist. The anchor leaves when the key changes, when a sibling's plan
-displaces it, or on :meth:`SessionState.invalidate`, so a stale
-applicationId (or a switch to another table dir) can never pin dead
-blocks in a long-lived multi-session process.
+unpersist. The anchor leaves (unpersisted, or stopped if it is a stream)
+when the key changes, when a sibling's plan or call displaces it, or on
+:meth:`SessionState.invalidate`, so a stale applicationId (or a switch to
+another table dir) can never pin dead blocks or a running query in a
+long-lived multi-session process.
 
 Unpersist BEFORE build on a key change. Two keys can name one plan (a dir
 with and without a trailing slash). Were the old anchor unpersisted after
@@ -61,9 +72,11 @@ the new layout would be recomputed on every use while ``is_cached`` and
 
 Locking. One lock per name: the web server's ``/kpi`` route runs the taxi
 KPI queries from concurrent request threads, and two simultaneous misses on
-one name would double-build and leak the loser's persist. ``build()`` runs under its
-name's lock — a duplicate build costs more than the serialization it
-prevents — while other names build in parallel, and a build may read
+one name would double-build and leak the loser's persist (or its running
+query). ``build()`` and a stream's drain run under the name's lock — a
+duplicate build costs more than the serialization it prevents, and a
+sibling's displacement cannot stop a query in the middle of another
+caller's drain — while other names build in parallel, and a build may read
 another entry (syndication's graph reads the pair layout).
 
 Staleness contract (tests/test_cache_lifecycle.py pins it): a layout has
@@ -86,6 +99,7 @@ from collections.abc import Callable
 from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from nyc_taxi_pyspark_spark.sources.io import _TS_UNIT_CACHE
 
@@ -98,20 +112,37 @@ class _Entry:
         # key is None when empty: a cached None value (kcore's empty-graph
         # k) is still a hit
         self.key: tuple | None = None
-        self.anchor = None  # the value built first; a frame owns the cache entry
+        self.anchor = None  # the value built first; owns the cache entry or the query
         self.session: SparkSession | None = None  # the last caller...
         self.handle = None  # ...and the value it got back
 
     def drop(self) -> None:
-        """Forget the entry, unpersisting the anchor if it is a DataFrame.
-        Called with ``lock`` held."""
+        """Forget the entry, unpersisting the anchor if it is a DataFrame and
+        stopping it if it is a stream. Called with ``lock`` held."""
         anchor = self.anchor
         self.key = self.anchor = self.session = self.handle = None
-        if isinstance(anchor, DataFrame):
-            try:
+        try:
+            if isinstance(anchor, DataFrame):
                 anchor.unpersist()
-            except Py4JError:
-                pass  # dead session: blocks are already gone
+            elif isinstance(anchor, StreamingQuery):
+                anchor.stop()
+        except Py4JError:
+            pass  # dead session: its blocks and queries are already gone
+
+    def live(self) -> bool:
+        """False for a held stream that is no longer running."""
+        return not isinstance(self.handle, StreamingQuery) or self.handle.isActive
+
+    def value(self):
+        """The held value, a stream drained of all available input first.
+        Called with ``lock`` held; a failed drain drops the entry."""
+        if isinstance(self.handle, StreamingQuery):
+            try:
+                self.handle.processAllAvailable()
+            except BaseException:
+                self.drop()
+                raise
+        return self.handle
 
 
 class SessionState:
@@ -138,8 +169,8 @@ class SessionState:
         with self._lock:
             entry = self._entries.setdefault(name, _Entry())
         with entry.lock:
-            if entry.key == key and entry.session is spark:
-                return entry.handle
+            if entry.key == key and entry.session is spark and entry.live():
+                return entry.value()
             if entry.key == key and isinstance(entry.anchor, DataFrame):
                 value = build()  # a sibling: see "Key" in the module docstring
                 if value.storageLevel != StorageLevel.NONE:
@@ -154,7 +185,7 @@ class SessionState:
                     raise TypeError(f"{name}: a shared entry cannot hold a DataFrame")
                 value = value.persist()
             entry.key, entry.anchor, entry.session, entry.handle = key, value, spark, value
-            return value
+            return entry.value()
 
     def invalidate(self) -> None:
         """Drop every entry so the next ``get`` rebuilds from the current

@@ -190,8 +190,8 @@ def stream_stateful_totals(spark, sf_dir):
     # production monitor shape; the final-state reduction below is what
     # makes accumulated update-mode rows safe)
     updates = run_stream_cached(
-        spark, d, schema, running_totals_per_user, output_mode="update",
-        key="stateful_totals",
+        "streaming.stateful_totals", spark, d, schema,
+        running_totals_per_user, output_mode="update",
     )
     final = (
         updates.groupBy("user_id")
@@ -253,8 +253,8 @@ def stream_distribution_drift(spark, sf_dir):
         )
 
     updates = run_stream_cached(
-        spark, d, schema, transform, output_mode="update",
-        key="distribution_drift",
+        "streaming.distribution_drift", spark, d, schema, transform,
+        output_mode="update",
     )
     finals = updates.groupBy("event_type", "band", "is_first").agg(
         F.max("n").alias("n")
@@ -378,8 +378,8 @@ def stream_ewma_monitor(spark, sf_dir):
         ]
     )
     updates = run_stream_cached(
-        spark, d, schema, ewma_monitor_per_user, output_mode="update",
-        key="ewma_monitor",
+        "streaming.ewma_monitor", spark, d, schema, ewma_monitor_per_user,
+        output_mode="update",
     )
     final = (
         updates.groupBy("user_id")

@@ -1,4 +1,4 @@
-from nyc_taxi_pyspark_spark.functions.exact import dsum, davg, dstddev
+from nyc_taxi_pyspark_spark.functions.exact import dsum, davg
 from nyc_taxi_pyspark_spark.functions import scalar
 
-__all__ = ["dsum", "davg", "dstddev", "scalar"]
+__all__ = ["dsum", "davg", "scalar"]

@@ -33,9 +33,9 @@ double never is.
 
 Overflow headroom: int64 holds ±9.2e18. At scale 6 that is ~9.2e12 in
 measure units — fine for per-group sums here; for 100 TB grand totals over
-high-scale measures, aggregate per-partition first or drop to the decimal
-variant (`dsum_decimal`) which trades 3× codegen cost for 38 digits. Spark
-runs ANSI mode by default on 4.x, so an overflow raises rather than wraps.
+high-scale measures, aggregate per-partition first or use `dsum_wide`,
+which keeps two exact int64 sums split at 1e9. Spark runs ANSI mode by
+default on 4.x, so an overflow raises rather than wraps.
 """
 
 from __future__ import annotations
@@ -76,18 +76,6 @@ def davg(col: Column | str, scale: int = 4) -> Column:
     return dsum(c, scale) / F.count(c)
 
 
-def dstddev(col: Column | str, scale: int = 4) -> Column:
-    """Order-independent sample standard deviation via exact sums of x and
-    x² (x² computed in double first — the same IEEE product on every
-    engine): sqrt((Σx² − (Σx)²/n) / (n−1)). Pass scale ≥ the exact scale
-    of x²."""
-    c = _c(col)
-    n = F.count(c).cast("double")
-    sx = dsum(c, scale)
-    sxx = dsum(c * c, scale)
-    return F.sqrt((sxx - (sx * sx) / n) / (n - F.lit(1.0)))
-
-
 _WIDE_SPLIT = 1_000_000_000  # 1e9: per-row cents split into hi/lo int64 sums
 
 
@@ -114,12 +102,6 @@ def dsum_wide(col: Column | str, scale: int = 4) -> Column:
     return (
         hi.cast("double") * F.lit(float(_WIDE_SPLIT)) + lo.cast("double")
     ) / F.lit(float(10**scale))
-
-
-def dsum_decimal(col: Column | str, scale: int = 4) -> Column:
-    """Decimal-accumulator variant of :func:`dsum` — 3× slower in codegen
-    but with decimal(28) headroom; for grand totals beyond int64 range."""
-    return F.sum(_c(col).cast(f"decimal(18,{scale})")).cast("double")
 
 
 def present_round(col: Column | str, digits: int = 2) -> Column:

@@ -128,17 +128,17 @@ def register(spark) -> None:
 
 class JsonlStreamReader(SimpleDataSourceStreamReader):
     """Streaming half of the connector: the source directory is an
-    append-only log of .jsonl files consumed in filename order, and the
-    OFFSET is how many files have been consumed — `read(start)` returns
-    every record in files[start:] plus the new offset, and
-    `readBetweenOffsets` replays an exact [start, end) file range on
-    recovery, so a checkpointed query resumes without loss or
-    double-reads.
+    append-only log of .jsonl files consumed in filename order. The OFFSET
+    is a position in that log — ``file`` files are consumed, plus ``pos``
+    bytes of the next one — so `read(start)` returns the records from
+    there to the last complete line of the newest file, and
+    `readBetweenOffsets` replays an exact range on recovery: a
+    checkpointed query resumes without loss or double-reads.
 
-    As with Spark's own file-stream sources, a file must appear in the
-    directory whole: write it under a name the ``*.jsonl`` glob skips (a
-    dot-prefixed one, say) and rename it in. A file listed while still
-    being written counts as consumed, so its unwritten tail is never read.
+    A file may be written in place. Only complete (newline-terminated)
+    lines of the newest file are consumed, and its tail is read by a later
+    trigger; once a later file appears, the earlier one is read to its
+    end.
 
     The *simple* stream API runs reads driver-side (Spark prefetches and
     ships record batches to executors) — right for control-plane-size
@@ -157,30 +157,35 @@ class JsonlStreamReader(SimpleDataSourceStreamReader):
     def _files(self) -> list[str]:
         return sorted(glob.glob(os.path.join(self.path, "*.jsonl")))
 
-    def _rows(self, paths: list[str]) -> Iterator[tuple]:
+    def _rows(self, files: list[str], start: dict, end: dict) -> list[tuple]:
         names = [f.name for f in self.schema.fields]
-        for p in paths:
-            with open(p, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        row = json.loads(line)
-                        yield tuple(row.get(n) for n in names)
+        rows = []
+        for i in range(start["file"], end["file"] + 1):
+            lo = start["pos"] if i == start["file"] else 0
+            with open(files[i], "rb") as fh:
+                fh.seek(lo)
+                data = fh.read(end["pos"] - lo) if i == end["file"] else fh.read()
+            for line in data.splitlines():
+                if line.strip():
+                    row = json.loads(line)
+                    rows.append(tuple(row.get(n) for n in names))
+        return rows
 
     def initialOffset(self) -> dict:
-        return {"files_read": 0}
+        return {"file": 0, "pos": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         files = self._files()
-        n = start["files_read"]
+        if not files:
+            return iter([]), start
+        last = len(files) - 1
+        lo = start["pos"] if start["file"] == last else 0
+        with open(files[last], "rb") as fh:
+            fh.seek(lo)
+            end = {"file": last, "pos": lo + fh.read().rfind(b"\n") + 1}
         # a materialized list-iterator, not a generator: the prefetcher
         # advances it with next() and pickles the remainder
-        return iter(list(self._rows(files[n:]))), {
-            "files_read": len(files)
-        }
+        return iter(self._rows(files, start, end)), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        files = self._files()
-        return iter(
-            list(self._rows(files[start["files_read"] : end["files_read"]]))
-        )
+        return iter(self._rows(self._files(), start, end))

@@ -12,8 +12,10 @@ catalog proves state == batch GROUP BY, hash-exact.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,10 +72,17 @@ def read_state(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
 def state_checkpoint_dir(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic per-(application, table) checkpoint location, reused
     across invocations so repeat reads inspect the SAME state instead of
-    rebuilding it (same idiom as streaming/runner.parquet_stream_dir)."""
+    rebuilding it (same idiom as streaming/runner.parquet_stream_dir).
+    The application id names it, so no later process reads it again: the
+    process that creates it removes it when the interpreter exits."""
     tag = hashlib.sha1(
         f"{spark.sparkContext.applicationId}|{os.path.realpath(sf_dir)}".encode()
     ).hexdigest()[:12]
     d = os.path.join(tempfile.gettempdir(), f"state_inspect_{tag}")
-    os.makedirs(d, exist_ok=True)
+    try:
+        os.makedirs(d)
+    except FileExistsError:
+        pass
+    else:
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d

@@ -105,8 +105,10 @@ def _build_resharded(spark, sf_dir: str, out_dir: str, n_files: int = 7) -> None
         )
 
 
-def _canon_hash(pdf) -> str:
-    """Order-insensitive bit-exact hash (mirrors the in-suite sweep)."""
+def canon_hash(pdf) -> str:
+    """Order-insensitive bit-exact hash of a pandas frame: doubles as hex
+    (NaN normalized), columns by name, rows sorted. The in-suite sweeps
+    (partition, ANSI, input layout) compare results with it too."""
     pdf = pdf.reindex(sorted(pdf.columns), axis=1)
 
     def cell(v):
@@ -175,9 +177,9 @@ def main(argv: list[str]) -> int:
             # each side builds its own layouts: a sibling would otherwise
             # read the layout the other side persisted (catalog._cache)
             STATE.invalidate()
-            ha = _canon_hash(run_a(fn).toPandas())
+            ha = canon_hash(run_a(fn).toPandas())
             STATE.invalidate()
-            hb = _canon_hash(run_b(fn).toPandas())
+            hb = canon_hash(run_b(fn).toPandas())
         except Exception as e:  # noqa: BLE001
             n_error += 1
             line = f"ERROR {name}: {type(e).__name__}: {str(e)[:200]}"

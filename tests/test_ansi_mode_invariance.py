@@ -13,8 +13,6 @@ must return the rows of its own build.
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 
@@ -24,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nyc_taxi_pyspark_spark.catalog import QUERIES  # noqa: E402
 from nyc_taxi_pyspark_spark.catalog._cache import STATE  # noqa: E402
+from scripts.layout_invariance_audit import canon_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,20 +34,6 @@ SUBSET = [
     "sql_daily_kpis",  # FLOOR-idiom portable rounding
     "events_cusum_changepoint",  # undivided integer CUSUM argmax
 ]
-
-
-def _canon_hash(df) -> str:
-    pdf = df.toPandas().reindex(sorted(df.columns), axis=1)
-
-    def cell(v):
-        if isinstance(v, float):
-            return "nan" if math.isnan(v) else v.hex()
-        return repr(v)
-
-    rows = sorted(
-        "|".join(cell(v) for v in rec) for rec in pdf.itertuples(index=False)
-    )
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
 @pytest.fixture(scope="module")
@@ -64,7 +49,7 @@ def _own_build_hash(session, name) -> str:
     """Hash the query's result with every layout built in ``session``, so
     neither side reads a layout the other side persisted (catalog._cache)."""
     STATE.invalidate()
-    return _canon_hash(QUERIES[name](session, SF))
+    return canon_hash(QUERIES[name](session, SF).toPandas())
 
 
 @pytest.mark.parametrize("name", SUBSET)
@@ -73,7 +58,7 @@ def test_result_invariant_to_ansi_mode(sessions, name):
     on_hash = _own_build_hash(on, name)
     # off right after on, store kept: off reads each layout on anchored
     # whose plan matches under off's conf, and builds the rest itself
-    off_after_on = _canon_hash(QUERIES[name](off, SF))
+    off_after_on = canon_hash(QUERIES[name](off, SF).toPandas())
     off_hash = _own_build_hash(off, name)
     assert on_hash == off_hash
     assert off_after_on == off_hash

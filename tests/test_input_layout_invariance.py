@@ -18,8 +18,6 @@ physical file set IS the output); see the audit's _EXPECTED.
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 
@@ -28,6 +26,8 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nyc_taxi_pyspark_spark.catalog import QUERIES  # noqa: E402
+from nyc_taxi_pyspark_spark.catalog._cache import STATE  # noqa: E402
+from scripts.layout_invariance_audit import _build_resharded, canon_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -48,45 +48,17 @@ SUBSET = [
 ]
 
 
-def _canon_hash(df) -> str:
-    pdf = df.toPandas()
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-
-    def cell(v):
-        if isinstance(v, float):
-            return "nan" if math.isnan(v) else v.hex()
-        return repr(v)
-
-    rows = sorted(
-        "|".join(cell(v) for v in rec) for rec in pdf.itertuples(index=False)
-    )
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
-
-
 @pytest.fixture(scope="module")
 def reshard_dir(spark, tmp_path_factory):
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    from scripts.layout_invariance_audit import _build_resharded
-
     d = str(tmp_path_factory.mktemp("reshard"))
     _build_resharded(spark, SF, d)
-    before = set(runner._RUNNING)
     yield d
-    # unregister EVERY stream this module started (testdata dir AND
-    # reshard dir) so later streaming tests still observe a cold first
-    # invocation — leaking the testdata-dir stream broke the
-    # reuse-counting test downstream in full-suite order
-    for k in set(runner._RUNNING) - before:
-        ent = runner._RUNNING.pop(k)
-        try:
-            if ent.q is not None:
-                ent.q.stop()
-        except Exception:
-            pass
+    STATE.invalidate()  # stops the streams this module started
 
 
 @pytest.mark.parametrize("name", SUBSET)
 def test_result_invariant_to_input_layout(spark, reshard_dir, name):
     fn = QUERIES[name]
-    assert _canon_hash(fn(spark, SF)) == _canon_hash(fn(spark, reshard_dir))
+    assert canon_hash(fn(spark, SF).toPandas()) == canon_hash(
+        fn(spark, reshard_dir).toPandas()
+    )

@@ -19,13 +19,11 @@ partition layout — that contract is pinned by their own determinism tests
 
 from __future__ import annotations
 
-import hashlib
-import math
-
 import pytest
 
 from nyc_taxi_pyspark_spark.catalog import QUERIES
 from nyc_taxi_pyspark_spark.catalog._cache import STATE
+from scripts.layout_invariance_audit import canon_hash
 
 SF = "/root/testdata/sf0.001"
 
@@ -104,22 +102,6 @@ SWEEP = [
 ]
 
 
-def _canon_hash(df) -> str:
-    pdf = df.toPandas()
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-
-    def cell(v):
-        if isinstance(v, float):
-            # bit-exact canonical text for doubles (NaN normalized)
-            return "nan" if math.isnan(v) else v.hex()
-        return repr(v)
-
-    rows = sorted(
-        "|".join(cell(v) for v in rec) for rec in pdf.itertuples(index=False)
-    )
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
-
-
 @pytest.fixture(scope="module")
 def sessions(spark):
     lo = spark.newSession()
@@ -134,7 +116,7 @@ def _own_build_hash(session, name) -> str:
     without the invalidate, a sibling would read the layout the other side
     persisted (catalog._cache), and the sweep would not test its own build."""
     STATE.invalidate()
-    return _canon_hash(QUERIES[name](session, SF))
+    return canon_hash(QUERIES[name](session, SF).toPandas())
 
 
 @pytest.mark.parametrize("name", SWEEP)

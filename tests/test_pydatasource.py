@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,52 +96,56 @@ def test_mixed_filters_split_between_source_and_spark(spark, jsonl_tree):
     assert {tuple(r) for r in df.collect()} == {tuple(r) for r in want}
 
 
-def test_streaming_source_incremental_exactly_once(spark, tmp_path):
-    """The connector's streaming half: files appended to the source dir
-    arrive in the next micro-batch, each record exactly once, offsets
-    advancing by file count.
+def _nation_lines(lo: int, hi: int) -> str:
+    return "".join(
+        json.dumps({"n_nationkey": i, "n_name": f"N{i}", "n_regionkey": i % 5}) + "\n"
+        for i in range(lo, hi)
+    )
 
-    The Python-data-source stream spins up a Python worker per batch;
-    under full-suite load that startup can fail transiently, so the test
-    retries ENVIRONMENT exceptions once with a fresh source dir. Count
+
+def _retry_on_environment_error(attempt) -> None:
+    """The Python-data-source stream spins up a Python worker per batch;
+    under full-suite load that startup can fail transiently, so an
+    ENVIRONMENT exception is retried once with a fresh source dir. Count
     assertions are never retried — a real lost/duplicated record fails
     immediately."""
-    import time
+    try:
+        attempt(0)
+    except AssertionError:
+        raise
+    except Exception:
+        attempt(1)
 
+
+def _start_stream(spark, src, round_no):
     register(spark)
-    schema = "n_nationkey int, n_name string, n_regionkey int"
+    name = f"pysrc_stream_{round_no}_{int(time.time() * 1000)}"
+    q = (
+        spark.readStream.format("jsonl_files")
+        .schema("n_nationkey int, n_name string, n_regionkey int")
+        .load(str(src))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .start()
+    )
+    return q, name
+
+
+def test_streaming_source_incremental_exactly_once(spark, tmp_path):
+    """The connector's streaming half: files appended to the source dir
+    arrive in the next micro-batch, each record exactly once."""
 
     def attempt(round_no: int) -> None:
         src = tmp_path / f"stream_src_{round_no}"
         src.mkdir()
-
-        def emit(name, lo, hi):
-            # Files enter the source dir whole (JsonlStreamReader's
-            # contract): the running stream lists the dir on every trigger,
-            # and a listing that caught b.jsonl created but not yet written
-            # consumed it with 0 rows (10 of 25 under full-suite load).
-            part = src / f".{name}.part"
-            with open(part, "w") as fh:
-                for i in range(lo, hi):
-                    fh.write(json.dumps({"n_nationkey": i, "n_name": f"N{i}", "n_regionkey": i % 5}) + "\n")
-            os.replace(part, src / name)
-
-        emit("a.jsonl", 0, 10)
-        name = f"pysrc_stream_{round_no}_{int(time.time()*1000)}"
-        q = (
-            spark.readStream.format("jsonl_files")
-            .schema(schema)
-            .load(str(src))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
+        (src / "a.jsonl").write_text(_nation_lines(0, 10))
+        q, name = _start_stream(spark, src, round_no)
         try:
             q.processAllAvailable()
             n0 = spark.table(name).count()
             assert n0 == 10, (n0, q.status, q.lastProgress)
-            emit("b.jsonl", 10, 25)
+            (src / "b.jsonl").write_text(_nation_lines(10, 25))
             q.processAllAvailable()
             got = spark.table(name)
             n1 = got.count()
@@ -156,9 +161,37 @@ def test_streaming_source_incremental_exactly_once(spark, tmp_path):
         finally:
             q.stop()
 
-    try:
-        attempt(0)
-    except AssertionError:
-        raise
-    except Exception:
-        attempt(1)
+    _retry_on_environment_error(attempt)
+
+
+def test_streaming_source_reads_a_growing_file_once(spark, tmp_path):
+    """A file written in place in two halves around a trigger: the trigger
+    reads the complete lines of the first half and stops at the byte after
+    the last one; the next trigger reads on from there. Every row arrives
+    exactly once, the line cut in half included."""
+    head = _nation_lines(10, 17)
+    tail = _nation_lines(17, 25)
+    cut = len(head) + len(tail.splitlines()[0]) // 2  # mid-way through row 17
+
+    def attempt(round_no: int) -> None:
+        src = tmp_path / f"grow_src_{round_no}"
+        src.mkdir()
+        (src / "a.jsonl").write_text(_nation_lines(0, 10))
+        q, name = _start_stream(spark, src, round_no)
+        try:
+            q.processAllAvailable()
+            text = head + tail
+            with open(src / "b.jsonl", "w") as fh:
+                fh.write(text[:cut])
+                fh.flush()
+                q.processAllAvailable()
+                n_half = spark.table(name).count()
+                fh.write(text[cut:])
+            q.processAllAvailable()
+            got = spark.table(name)
+            assert (n_half, got.count()) == (17, 25), q.lastProgress
+            assert got.select("n_nationkey").distinct().count() == 25
+        finally:
+            q.stop()
+
+    _retry_on_environment_error(attempt)

@@ -19,8 +19,11 @@ second call is only built:
 
 The store-reading queries are found by wrapping ``STATE.get`` while A
 builds each query, not from a hand-written list: every catalog query is a
-case, and one that reads no entry is skipped (61 read one, the three
-``taxi_kpi_*`` queries among them).
+case, and one that reads no entry is skipped (64 read one, the three
+``taxi_kpi_*`` queries among them). The three persistent stream queries
+hold a running query, which is bound to its session like a scalar: B's
+first call stops A's query and starts its own, and B's second call drains
+it.
 """
 
 from __future__ import annotations

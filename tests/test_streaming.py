@@ -4,11 +4,17 @@ same transform runs under readStream (memory sink, drained synchronously)."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import tempfile
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_taxi_pyspark_spark.catalog._cache import STATE
+from nyc_taxi_pyspark_spark.catalog.streaming import stream_stateful_totals
 from nyc_taxi_pyspark_spark.schemas import TESTDATA_SCHEMAS
 from nyc_taxi_pyspark_spark.sources.io import load_table
 from nyc_taxi_pyspark_spark.streaming.runner import run_stream_once
@@ -283,18 +289,11 @@ def test_stateful_stream_matches_on_directory_table(spark, tmp_path):
     final states whether events is a single parquet file (driver
     testdata) or a Spark-written multi-file directory (every real
     table)."""
-    from nyc_taxi_pyspark_spark.catalog.streaming import (
-        stream_stateful_totals,
-    )
-    from nyc_taxi_pyspark_spark.sources.io import load_table
-    from nyc_taxi_pyspark_spark.streaming import runner
-
     sf = "/root/testdata/sf0.001"
     resharded = str(tmp_path / "resharded")
     load_table(spark, sf, "events").repartition(5).write.parquet(
         resharded + "/events.parquet"
     )
-    before = set(runner._RUNNING)
     try:
         single = {
             tuple(r) for r in stream_stateful_totals(spark, sf).collect()
@@ -306,302 +305,178 @@ def test_stateful_stream_matches_on_directory_table(spark, tmp_path):
         assert len(single) > 0
         assert single == multi
     finally:
-        # unregister the streams this test started so the reuse-counting
-        # test below still observes a cold first invocation
-        for k in set(runner._RUNNING) - before:
-            ent = runner._RUNNING.pop(k)
-            try:
-                if ent.q is not None:
-                    ent.q.stop()
-            except Exception:
-                pass
+        STATE.invalidate()
 
 
-def test_sibling_sessions_keep_their_own_tracked_streams(spark):
-    """The memory sink's table is a temp view of the session that started
-    the query, so the persistent-stream registry must key on the SESSION:
-    before it did, a sibling session's lookup failed the table read,
-    popped the entry and restarted — orphaning the first session's
-    still-running query (active, untracked, processing forever in a
-    long-lived multi-session server). Each session now keeps its own
-    tracked stream and every active query stays tracked."""
-    from nyc_taxi_pyspark_spark.catalog.streaming import (
-        stream_stateful_totals,
+# The persistent stream queries hold their running query in the session-state
+# store (catalog._cache.STATE), one entry per stream name; these tests pin
+# that contract on stream_stateful_totals.
+TOTALS = "streaming.stateful_totals"
+
+
+def _batch_totals(spark):
+    """The batch twin of stream_stateful_totals, sorted."""
+    rows = (
+        load_table(spark, SF_DIR, "events")
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint"),
+            F.sum(F.round(F.col("value") * 100).try_cast("bigint")),
+        )
+        .collect()
     )
-    from nyc_taxi_pyspark_spark.streaming import runner
+    return sorted(tuple(r) for r in rows)
 
-    sf = "/root/testdata/sf0.001"
-    # a tracked stream for this source left by an earlier test would turn
-    # the first call into a reuse and skew the two-new-entries count —
-    # start cold regardless of test order
-    for k in [k for k in runner._RUNNING if sf in str(k)]:
-        ent = runner._RUNNING.pop(k)
+
+def _totals(session):
+    rows = stream_stateful_totals(session, SF_DIR).collect()
+    return sorted(tuple(r) for r in rows)
+
+
+def _active(*sessions, tag="stateful_totals"):
+    """The active store-held queries of ``sessions`` whose name holds ``tag``."""
+    return [
+        q
+        for s in sessions
+        for q in s.streams.active
+        if q.name.startswith("stream_streaming_") and tag in q.name
+    ]
+
+
+def _concurrently(fn, args):
+    """``[fn(a) for a in args]``, each call on its own thread."""
+    out, errors = [None] * len(args), []
+
+    def run(i):
         try:
-            if ent.q is not None:
-                ent.q.stop()
-        except Exception:
-            pass
-    before = set(runner._RUNNING)
-    sib = spark.newSession()
-    try:
-        a = {tuple(r) for r in stream_stateful_totals(spark, sf).collect()}
-        b = {tuple(r) for r in stream_stateful_totals(sib, sf).collect()}
-        assert a == b and len(a) > 0
-        new = set(runner._RUNNING) - before
-        assert len(new) == 2  # one tracked stream per session, no takeover
-        tracked = {
-            runner._RUNNING[k].q.id
-            for k in runner._RUNNING
-            if runner._RUNNING[k].q is not None
-        }
-        active = {q.id for q in spark.streams.active} | {
-            q.id for q in sib.streams.active
-        }
-        assert active <= tracked  # nothing runs untracked
-    finally:
-        for k in set(runner._RUNNING) - before:
-            ent = runner._RUNNING.pop(k)
-            try:
-                if ent.q is not None:
-                    ent.q.stop()
-            except Exception:
-                pass
+            out[i] = fn(args[i])
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=run, args=(i,), daemon=True)
+        for i in range(len(args))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads), "a call never returned"
+    if errors:
+        raise errors[0]
+    return out
 
 
-def test_cached_stream_reuses_running_query(spark):
-    # second invocation must reuse the running stream (no full stream
-    # startup): same rows, and the persistent-stream registry holds ONE
-    # active query for the key
-    import time as _time
+@pytest.fixture
+def starts(monkeypatch):
+    """An empty store whose stream starts are recorded by entry name; every
+    stream is stopped at the end."""
+    STATE.invalidate()
+    names: list[str] = []
+    get = STATE.get
 
-    from nyc_taxi_pyspark_spark.catalog.streaming import (
-        stream_stateful_totals,
-    )
-    from nyc_taxi_pyspark_spark.streaming import runner
+    def recording(name, spark, sf_dir, build):
+        def start():
+            names.append(name)
+            return build()
 
-    sf = "/root/testdata/sf0.001"
-    before = len(runner._RUNNING)
-    t0 = _time.perf_counter()
-    first = stream_stateful_totals(spark, sf).collect()
-    t_first = _time.perf_counter() - t0
-    t0 = _time.perf_counter()
-    second = stream_stateful_totals(spark, sf).collect()
-    t_second = _time.perf_counter() - t0
-    assert second == first and len(first) > 0
-    assert len(runner._RUNNING) == before + 1  # reused, not restarted
+        return get(name, spark, sf_dir, start)
+
+    monkeypatch.setattr(STATE, "get", recording)
+    yield names
+    STATE.invalidate()
+
+
+def test_cached_stream_reuses_running_query(spark, starts):
+    """A repeated call from the same session drains the running query
+    instead of paying full stream startup again."""
+    t0 = time.perf_counter()
+    first = _totals(spark)
+    t_first = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    second = _totals(spark)
+    t_second = time.perf_counter() - t0
+    assert second == first == _batch_totals(spark)
+    assert starts == [TOTALS] and len(_active(spark)) == 1
     assert t_second < 0.5 * t_first, (t_first, t_second)
 
 
-def test_stop_all_streams_drains_registry(spark):
-    """stop_all_streams must stop and untrack every persistent stream the
-    session owns — the pre-exit drain, so no memory-sink stream races
-    JVM teardown (a stack trace at process exit otherwise)."""
-    from nyc_taxi_pyspark_spark.catalog.streaming import (
-        stream_stateful_totals,
+def test_concurrent_first_calls_start_one_stream(spark, starts):
+    """Four threads of one session miss together: one starts the query
+    under the name's lock, and every call returns the drained rows."""
+    assert _concurrently(_totals, [spark] * 4) == [_batch_totals(spark)] * 4
+    assert starts == [TOTALS] and len(_active(spark)) == 1
+
+
+def test_sibling_call_displaces_the_running_stream(spark, starts):
+    """The memory sink is a temp view of the session that started the
+    query, so a sibling's call starts its own query and stops the one it
+    displaces: one running query per stream name across the sessions."""
+    sib = spark.newSession()
+    want = _batch_totals(spark)
+    assert _totals(spark) == want
+    [q] = _active(spark)
+    assert _totals(sib) == want
+    assert not q.isActive
+    assert _active(spark) == [] and len(_active(sib)) == 1
+    assert starts == [TOTALS, TOTALS]
+
+
+def test_concurrent_siblings_get_full_rows(spark, starts):
+    """Sibling calls that displace each other still each return every row:
+    a displacement waits for the drain in progress."""
+    sessions = [spark.newSession(), spark.newSession()]
+    assert _concurrently(_totals, sessions) == [_batch_totals(spark)] * 2
+    assert len(_active(*sessions)) == 1
+
+
+def test_stopped_stream_restarts_on_next_call(spark, starts):
+    """A held query that is no longer active (stopped from outside here)
+    is a miss: the next call starts the stream again."""
+    want = _totals(spark)
+    [q] = _active(spark)
+    q.stop()
+    assert _totals(spark) == want == _batch_totals(spark)
+    assert starts == [TOTALS, TOTALS] and len(_active(spark)) == 1
+
+
+def test_invalidate_stops_every_stream(spark, starts):
+    """``STATE.invalidate()`` stops the running queries with the rest of
+    the store, in every session, so none runs into JVM teardown."""
+    from nyc_taxi_pyspark_spark.catalog.streaming import stream_ewma_monitor
+
+    sib = spark.newSession()
+    _totals(spark)
+    stream_ewma_monitor(sib, SF_DIR).collect()
+    assert len(_active(spark)) == 1 and len(_active(sib, tag="ewma")) == 1
+    STATE.invalidate()
+    assert _active(spark, sib, tag="") == []
+
+
+def test_state_checkpoint_dir_is_removed_at_exit(tmp_path):
+    """The state-inspect checkpoint is named by the application id, so no
+    later process reads it: the process that made it removes it at exit
+    instead of leaving one directory per run in the temp dir."""
+    code = (
+        "import types\n"
+        "from nyc_taxi_pyspark_spark.streaming.state_inspect import"
+        " state_checkpoint_dir\n"
+        "sc = types.SimpleNamespace(applicationId='app-exit')\n"
+        "d = state_checkpoint_dir(types.SimpleNamespace(sparkContext=sc), '/x')\n"
+        "open(d + '/probe', 'w').close()\n"
+        "print(d)\n"
     )
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    sf = "/root/testdata/sf0.001"
-    rows = stream_stateful_totals(spark, sf).collect()
-    assert len(rows) > 0
-    assert any(k[0] is spark for k in runner._RUNNING)
-    runner.stop_all_streams(spark)
-    assert not any(k[0] is spark for k in runner._RUNNING)
-    assert not spark.streams.active
-    # idempotent on an already-drained session
-    runner.stop_all_streams(spark)
-
-
-def _fake_entry(runner, stopped):
-    class _FakeQuery:
-        def stop(self):
-            stopped.append(True)
-
-    ent = runner._StreamEntry()
-    ent.q, ent.name = _FakeQuery(), "ghost_table"
-    return ent
-
-
-def test_dead_session_entries_are_evicted():
-    """Registry entries whose owning session is DEFINITIVELY gone — the
-    context object torn down entirely — must be swept (their queries
-    STOPPED, not orphaned): a discarded session is never looked up again,
-    so without the sweep its stream would run forever and the dict would
-    grow unboundedly in a long-lived multi-session server."""
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    stopped = []
-
-    class _DeadSession:  # no sparkContext at all -> definitive dead signal
-        pass
-
-    key = (_DeadSession(), "app-dead", "/nowhere", "t", "append")
-    with runner._RUNNING_LOCK:
-        runner._RUNNING[key] = _fake_entry(runner, stopped)
-        popped = runner._pop_dead_sessions()
-        assert key not in runner._RUNNING
-        # the sweep must NOT stop queries while the global lock is held
-        # (a slow JVM stop() would stall every registry access — ADVICE
-        # r13); it hands the entries back for the caller to stop
-        assert stopped == []
-    for ent in popped:
-        with ent.lock:
-            if ent.q is not None:
-                ent.q.stop()
-    assert stopped == [True]
-
-
-def test_transient_probe_failure_does_not_evict():
-    """A transient error while PROBING a session (a py4j hiccup against a
-    healthy session) must not stop its running query: eviction acts only
-    on definitive dead signals, otherwise a concurrent thread of that
-    session pays a full stream restart and the accumulated memory-sink
-    state is lost (ADVICE r12)."""
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    stopped = []
-
-    class _FlakySession:  # probe raises a non-definitive error
-        @property
-        def sparkContext(self):
-            raise RuntimeError("py4j connection reset")
-
-    key = (_FlakySession(), "app-flaky", "/nowhere", "t", "append")
-    with runner._RUNNING_LOCK:
-        runner._RUNNING[key] = _fake_entry(runner, stopped)
-        popped = runner._pop_dead_sessions()
-        assert popped == []
-        assert key in runner._RUNNING  # left alone, query untouched
-        runner._RUNNING.pop(key)
-    assert stopped == []
-
-
-def test_hung_drain_on_one_key_does_not_block_other_keys(spark, tmp_path):
-    """The global registry lock covers bookkeeping only; drains run under
-    per-key locks. A hung drain (simulated by holding one key's entry
-    lock) must not block run_stream_cached on a DIFFERENT key — before
-    the r13 restructure the single global lock serialized all keys and
-    one stuck stream blocked every concurrent serving thread (ADVICE
-    r12)."""
-    import threading
-
-    from nyc_taxi_pyspark_spark.sources.io import load_table
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    hung_key = ("sentinel-session", "app-x", "/hung", "t", "append")
-    hung = runner._StreamEntry()
-    with runner._RUNNING_LOCK:
-        runner._RUNNING[hung_key] = hung
-
-    src = str(tmp_path / "src")
-    df = load_table(spark, "/root/testdata/sf0.001", "events").limit(100)
-    df.write.parquet(src)
-    schema = df.schema
-
-    result: list = []
-
-    def other_key():
-        out = runner.run_stream_cached(
-            spark, src, schema, lambda d: d, key="independent"
-        )
-        result.append(out.count())
-
-    hung.lock.acquire()  # the "stuck drain" on the sentinel key
-    try:
-        t = threading.Thread(target=other_key, daemon=True)
-        t.start()
-        t.join(timeout=120)
-        assert not t.is_alive(), "independent key blocked by a hung drain"
-        assert result and result[0] == 100
-    finally:
-        hung.lock.release()
-        with runner._RUNNING_LOCK:
-            runner._RUNNING.pop(hung_key, None)
-        runner.stop_all_streams(spark)
-
-
-def test_start_after_pop_does_not_orphan_stream(spark, tmp_path):
-    """If the registry entry is popped between insert and query start
-    (stop_all_streams running in that window, or a sibling starter's
-    failure-path pop), the SUCCESS path must not assign the query to the
-    popped entry and leave it active-but-untracked forever (ADVICE r13
-    medium): when the key is unclaimed it re-tracks the entry; when a
-    fresh entry claimed the key it stops its own query (the drained
-    memory sink still serves the call)."""
-    from nyc_taxi_pyspark_spark.sources.io import load_table
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    src = str(tmp_path / "src")
-    df = load_table(spark, "/root/testdata/sf0.001", "events").limit(50)
-    df.select("event_id", "event_type").write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    active_before = {q.id for q in spark.streams.active}
-
-    def _pop_my_key(tag):
-        # simulate stop_all_streams' pop phase landing in the window
-        # between registry insert and ent.lock / query start
-        with runner._RUNNING_LOCK:
-            for k in list(runner._RUNNING):
-                if k[3] == tag:
-                    return runner._RUNNING.pop(k)
-        return None
-
-    try:
-        # case 1: key left unclaimed after the pop -> entry re-inserted,
-        # stream stays tracked
-        def transform_popped(s):
-            _pop_my_key("popped")
-            return s
-
-        out = runner.run_stream_cached(
-            spark, src, schema, transform_popped, key="popped"
-        )
-        assert out.count() == 50
-        ents = [
-            runner._RUNNING[k] for k in list(runner._RUNNING) if k[3] == "popped"
-        ]
-        assert len(ents) == 1 and ents[0].q is not None and ents[0].q.isActive
-
-        # case 2: a fresh entry claimed the key while ours was popped ->
-        # our just-started query is stopped, the fresh entry survives
-        fresh = runner._StreamEntry()
-
-        def transform_claimed(s):
-            _pop_my_key("claimed")
-            k = (
-                spark,
-                spark.sparkContext.applicationId,
-                os.path.realpath(src),
-                "claimed",
-                "append",
-            )
-            with runner._RUNNING_LOCK:
-                runner._RUNNING[k] = fresh
-            return s
-
-        out2 = runner.run_stream_cached(
-            spark, src, schema, transform_claimed, key="claimed"
-        )
-        assert out2.count() == 50  # drained sink still serves this call
-        ents2 = [
-            runner._RUNNING[k]
-            for k in list(runner._RUNNING)
-            if k[3] == "claimed"
-        ]
-        assert ents2 == [fresh]  # fresh claimant not clobbered
-        # no active query beyond the session's tracked ones: the query our
-        # call started against the popped entry must have been stopped
-        tracked = {
-            e.q.id
-            for e in runner._RUNNING.values()
-            if e.q is not None and e.q.isActive
-        }
-        orphans = (
-            {q.id for q in spark.streams.active} - active_before - tracked
-        )
-        assert not orphans
-    finally:
-        runner.stop_all_streams(spark)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    d = out.stdout.strip()
+    assert os.path.dirname(d) == str(tmp_path)
+    assert not os.path.exists(d)
 
 
 def test_restart_from_checkpoint_no_reprocessing(spark, tmp_path):
